@@ -195,15 +195,26 @@ class QueryHandle:
         self.query.stop()
 
     def drain(self, timeout_s: float = 120.0) -> None:
-        """S6 drain: finish in-flight input, then stop."""
+        """S6 drain: finish in-flight input, then stop. A failed query
+        never looks drained: its ``StreamingQueryException`` is
+        re-raised at once, and any other error that outlasts
+        ``timeout_s`` of retries is re-raised too."""
+        from pyspark.errors import StreamingQueryException
+
         deadline = time.monotonic() + timeout_s
-        while time.monotonic() < deadline:
-            try:
-                self.query.processAllAvailable()
-                break
-            except Exception:
-                time.sleep(0.2)
-        self.query.stop()
+        try:
+            while True:
+                try:
+                    self.query.processAllAvailable()
+                    return
+                except StreamingQueryException:
+                    raise
+                except Exception:
+                    if time.monotonic() >= deadline:
+                        raise
+                    time.sleep(0.2)
+        finally:
+            self.query.stop()
 
 
 # (engine weakref, session weakref, listener) for every live Engine's

@@ -788,8 +788,8 @@ def streaming_scd2(
     (examples/orchestrator/src/lib.rs:81-94,244-287), evolved one step
     from "latest value per key" to "every historical interval".
 
-    State per key is TWO scalars — the open run's (state, valid_from) —
-    so state size is O(#keys), never O(#events). Each micro-batch folds
+    State per key is three scalars — the open run's (state,
+    valid_from) and whether the key's last row was null — so state size is O(#keys), never O(#events). Each micro-batch folds
     its rows in (ts, tiebreak) order: a state change CLOSES the open
     interval (emitted once, with its valid_to) and opens a new one; the
     batch ends by re-emitting the key's current OPEN interval (null
@@ -809,113 +809,179 @@ def streaming_scd2(
     accounting (``ChannelError::ReaderBehind``, reference
     subsystem/messaging/src/lib.rs:107-109). Before round 5 such rows
     silently corrupted the fold order; now the drop is explicit and
-    metered.
+    metered. Rows with a null key or a null ts are dropped and counted
+    the same way.
 
-    ``state_buckets``: hashed-bucket state layout via
-    :func:`_bucketed_fold` (ADOPTED from the gapfill A/B, BASELINE.md
-    r7); output-identical, pinned by the parametrized parity test.
+    Null states follow :func:`relational.scd2_history`'s
+    ``lag``-based edge rule: a row is an edge when the previous row's
+    state is null or differs from its own non-null state. A null row
+    after a non-null one is absorbed into the open run, and the row
+    after any null row opens a new run.
+
+    ``state_buckets``: hashed-bucket state layout (ADOPTED from the
+    gapfill A/B, BASELINE.md r7). Both layouts run one vectorized
+    :func:`_scd2_fold` — per bucket, or per key with that key's state —
+    and are output-identical, pinned by the parametrized parity test.
     """
+    state_cols = "cur_state string, cur_from_us long, last_null boolean"
+    # ts crosses to Python as epoch micros and the intervals come back
+    # as micros: no per-group timestamp conversion on either side
+    out_schema = "key long, state string, valid_from_us long, valid_to_us long"
 
-    def fold(pdf: pd.DataFrame, st: tuple):
-        """One key's batch fold: ((states, froms, tos) | None, new
-        state, n_late)."""
-        cur_state, cur_from_us = st
-        # Vectorized edge detection: a micro-batch carries thousands of
-        # rows per key group, so the fold must not drop to per-row
-        # Python. Sort once, shift to compare each row's state with its
-        # predecessor (the stored open run stands in for row -1), and
-        # only the few EDGE rows reach Python lists.
-        pdf = pdf.sort_values([ts_col, tiebreak_col])
-        n_late = 0
-        if cur_state is not None:
-            # late rows: before the open interval's start -> drop+count
-            ts_all = pdf[ts_col].astype("int64") // 1000
-            late = ts_all < cur_from_us
-            n_late = int(late.sum())
-            if n_late:
-                pdf = pdf[~late]
-                if not len(pdf):
-                    return None, st, n_late
-        sts = pdf[state_col].reset_index(drop=True)
-        ts_us = (pdf[ts_col].astype("int64") // 1000).reset_index(drop=True)
-        prev = sts.shift()
-        mask = sts.ne(prev)
-        mask.iloc[0] = cur_state is None or sts.iloc[0] != cur_state
-        e_states = sts[mask].tolist()
-        e_from = ts_us[mask].tolist()
-        run_states = ([cur_state] if cur_state is not None else []) + e_states
-        run_froms = ([cur_from_us] if cur_state is not None else []) + e_from
-        # run i closes where run i+1 opens; the last run stays open
-        out_state = run_states[:-1] + [run_states[-1]]
-        out_from = run_froms[:-1] + [run_froms[-1]]
-        out_to: list = run_froms[1:] + [None]
-        new_st = (run_states[-1], int(run_froms[-1]))
-        return (out_state, out_from, out_to), new_st, n_late
+    def fold(parts: list[pd.DataFrame], stored: tuple):
+        pdf = parts[0] if len(parts) == 1 else pd.concat(parts)
+        out, new, n_dropped = _scd2_fold(pdf, stored)
+        if n_dropped and late_counter is not None:
+            late_counter.add(n_dropped)
+        return out, new
 
-    def emit(k: int, out) -> pd.DataFrame:
-        out_state, out_from, out_to = out
-        return pd.DataFrame(
-            {
-                "key": [k] * len(out_state),
-                "state": out_state,
-                "valid_from": pd.to_datetime(out_from, unit="us"),
-                "valid_to": pd.to_datetime(
-                    [pd.NaT if t is None else t for t in out_to], unit="us"
-                ),
-            }
-        )
-
-    out_schema = (
-        "key long, state string, valid_from timestamp, valid_to timestamp"
-    )
-
-    def fn(
+    def per_key_fn(
         key, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if key[0] is None or pd.isna(key[0]):
-            # null-key drop-and-count: mirrors _bucketed_fold's policy
-            if late_counter is not None:
-                late_counter.add(sum(len(p) for p in pdfs))
-            return
-        st = state.get if state.exists else (None, None)
         parts = [p for p in pdfs if len(p)]
         if not parts:
-            state.update(st)
             return
-        out, new_st, n_late = fold(pd.concat(parts), st)
-        if n_late and late_counter is not None:
-            late_counter.add(n_late)
-        state.update(new_st)
+        stored = (
+            ([key[0]], *([v] for v in state.get)) if state.exists else ([],) * 4
+        )
+        out, new = fold(parts, stored)
+        if len(new[0]):
+            state.update(tuple(c[0] for c in new[1:]))
         if out is not None:
-            yield emit(key[0], out)
+            yield out
+
+    def bucket_fn(
+        bkey, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        parts = [p for p in pdfs if len(p)]
+        if not parts:
+            return
+        stored = tuple(state.get) if state.exists else ([],) * 4
+        out, new = fold(parts, stored)
+        state.update(new)
+        if out is not None:
+            yield out
 
     selected = events.select(
-        F.col(key_col).alias("key"),
-        F.col(state_col),
-        F.col(ts_col),
-        F.col(tiebreak_col),
+        F.col(key_col).alias("_key"),
+        F.col(state_col).alias("state"),
+        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("ts_us"),
+        F.col(tiebreak_col).alias("tiebreak"),
     )
     state_buckets = resolve_state_buckets(state_buckets)
     if state_buckets is None:
-        return selected.groupBy("key").applyInPandasWithState(
-            fn,
+        folded = selected.groupBy("_key").applyInPandasWithState(
+            per_key_fn,
             outputStructType=out_schema,
-            stateStructType="cur_state string, cur_from_us long",
+            stateStructType=state_cols,
             outputMode="update",
             timeoutConf="NoTimeout",
         )
-
-    return _bucketed_fold(
-        selected,
+    else:
+        folded = _group_by_bucket(
+            selected, "_key", state_buckets, bucket_fn, state_cols, out_schema
+        )
+    return folded.select(
         "key",
-        state_buckets,
-        fold,
-        emit,
-        fresh_state=(None, None),
-        state_cols="cur_state string, cur_from_us long",
-        out_schema=out_schema,
-        late_counter=late_counter,
+        "state",
+        F.timestamp_micros("valid_from_us").alias("valid_from"),
+        F.timestamp_micros("valid_to_us").alias("valid_to"),
     )
+
+
+def _scd2_fold(pdf: pd.DataFrame, stored: tuple):
+    """Fold one micro-batch of :func:`streaming_scd2` rows (columns
+    ``_key, state, ts_us, tiebreak``) for many keys at once: one sort,
+    numpy masks, one output frame.
+
+    ``stored`` is the parallel-array state ``(keys, cur_state,
+    cur_from_us, last_null)`` of the keys seen so far. Returns ``(out
+    | None, new_stored, n_dropped)``: for every key with a surviving
+    row, ``out`` re-emits its stored open run (closed if an edge
+    follows) and every run opened in this batch, the last one open;
+    ``n_dropped`` counts rows with a null key or ts plus late rows (ts
+    before the key's open run start)."""
+    ks, run_state, run_from, run_last_null = (
+        np.asarray(c, dtype=t) for c, t in zip(stored, ("int64", object, "int64", bool))
+    )
+    key = pdf["_key"].to_numpy()
+    ts_us = pdf["ts_us"].to_numpy()
+    tb = pdf["tiebreak"].to_numpy()
+    st = pdf["state"].to_numpy(dtype=object)
+    usable = ~(pd.isna(key) | pd.isna(ts_us))
+    n_null = len(key) - int(usable.sum())
+    if n_null:
+        key, ts_us, tb, st = (a[usable] for a in (key, ts_us, tb, st))
+    if tb.dtype == object:  # e.g. string ids: nulls sort last, as in pandas
+        codes = pd.factorize(tb, sort=True)[0]
+        tb = np.where(codes < 0, len(codes), codes)
+    # one stable sort by (key, ts, tiebreak)
+    order = np.lexsort((tb, ts_us, key))
+    key, ts_us, st = key[order].astype("int64"), ts_us[order].astype("int64"), st[order]
+    at = pd.Index(ks).get_indexer(key)
+    held = at >= 0
+    late = np.zeros(len(key), dtype=bool)
+    late[held] = ts_us[held] < run_from[at[held]]
+    n_late = int(late.sum())
+    if n_late:
+        key, ts_us, st, at, held = (a[~late] for a in (key, ts_us, st, at, held))
+    n = len(key)
+    if not n:
+        return None, stored, n_null + n_late
+
+    # edge rule of relational.scd2_history: lag(state) IS NULL OR
+    # lag(state) != state; the stored run's last row is the first row's lag
+    first = np.ones(n, dtype=bool)
+    first[1:] = key[1:] != key[:-1]
+    last = np.ones(n, dtype=bool)
+    last[:-1] = first[1:]
+    null = pd.isna(st)
+    prev = np.empty(n, dtype=object)
+    prev[1:] = st[:-1]
+    prev_null = np.empty(n, dtype=bool)
+    prev_null[1:] = null[:-1]
+    prev_null[first] = True
+    resumed = first & held
+    prev[resumed] = run_state[at[resumed]]
+    prev_null[resumed] = run_last_null[at[resumed]]
+    edge = prev_null | (~null & (st != prev))
+
+    # runs per key in order: the stored open run, then each edge row
+    s_pos, e_pos = np.flatnonzero(resumed), np.flatnonzero(edge)
+    pos = np.concatenate([s_pos, e_pos])
+    order = np.lexsort((np.r_[np.zeros(len(s_pos)), np.ones(len(e_pos))], pos))
+    r_key = key[pos][order]
+    r_state = np.concatenate([run_state[at[s_pos]], st[e_pos]])[order]
+    r_from = np.concatenate([run_from[at[s_pos]], ts_us[e_pos]])[order]
+    closed = np.zeros(len(r_key), dtype=bool)
+    closed[:-1] = r_key[1:] == r_key[:-1]
+    r_to = np.zeros(len(r_key), dtype="int64")
+    r_to[:-1] = r_from[1:]
+    out = pd.DataFrame(
+        {
+            "key": r_key,
+            "state": r_state,
+            "valid_from_us": r_from,
+            "valid_to_us": pd.arrays.IntegerArray(r_to, ~closed),
+        }
+    )
+
+    # new state: each touched key's last run and last-row nullness
+    slot, is_open = at[last], ~closed
+    old = slot >= 0
+    ks, run_state, run_from, run_last_null = (
+        c.copy() for c in (ks, run_state, run_from, run_last_null)
+    )
+    cols = []
+    for col, val in (
+        (ks, key[last]),
+        (run_state, r_state[is_open]),
+        (run_from, r_from[is_open]),
+        (run_last_null, null[last]),
+    ):
+        col[slot[old]] = val[old]
+        cols.append(np.concatenate([col, val[~old]]).tolist())
+    return out, tuple(cols), n_null + n_late
 
 
 def streaming_gapfill_locf(
@@ -1498,12 +1564,7 @@ def _bucketed_fold(
     layouts stay output-identical on null-bearing corpora (the dq
     suite tolerates up to 2% null user_ids).
     """
-    fields = [f.strip() for f in state_cols.split(",")]
-    arr_struct = "keys array<long>, " + ", ".join(
-        f"{name} array<{typ}>"
-        for name, typ in (f.rsplit(" ", 1) for f in fields)
-    )
-    n_fields = len(fields)
+    n_fields = len(state_cols.split(","))
 
     def bucket_fn(
         bkey, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -1546,6 +1607,27 @@ def _bucketed_fold(
         if frames:
             yield pd.concat(frames, ignore_index=True)
 
+    return _group_by_bucket(
+        events, key_col, state_buckets, bucket_fn, state_cols, out_schema
+    )
+
+
+def _group_by_bucket(
+    events: DataFrame,
+    key_col: str,
+    state_buckets: int,
+    bucket_fn,
+    state_cols: str,
+    out_schema: str,
+) -> DataFrame:
+    """The hashed-bucket layout's Spark side: ``_key`` (the key cast to
+    long) plus a ``_state_bucket`` hash column, grouped into
+    ``applyInPandasWithState(bucket_fn)`` whose state is ``keys
+    array<long>`` plus one array per ``state_cols`` field."""
+    arr_struct = "keys array<long>, " + ", ".join(
+        f"{name} array<{typ}>"
+        for name, typ in (f.strip().rsplit(" ", 1) for f in state_cols.split(","))
+    )
     return (
         events.withColumn("_key", F.col(key_col).cast("long"))
         .withColumn(

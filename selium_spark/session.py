@@ -5,12 +5,20 @@ same code scales to a 1000-executor cluster against ~100 TB:
 
 - AQE on (runtime coalesce, skew-join splitting) so shuffle partition
   counts self-correct at any scale factor.
-- ``spark.sql.shuffle.partitions`` defaults to 2x local cores; on a real
-  cluster this is overridden (or left to AQE's initialPartitionNum).
+- ``spark.sql.shuffle.partitions`` defaults to ``max(cpus, 8)``; on a
+  real cluster this is overridden (or left to AQE's initialPartitionNum).
 - Arrow enabled for every Python<->JVM exchange (Pandas UDFs are the
   only Python hot path we allow).
 - Session timezone pinned to UTC so results are comparable with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
+- Python workers fork from :mod:`selium_spark.worker_daemon`
+  (``spark.python.daemon.module``), which stops every task from
+  re-reading ``pyspark.zip``'s directory (~0.12 s of CPU per task).
+  The package root leads ``spark.executorEnv.PYTHONPATH`` (merged with
+  any caller value), so workers import ``selium_spark`` — the daemon
+  and every UDF that imports the package — whatever the working
+  directory. Sessions are ``local[N]``, so the driver's package root
+  is the workers' too.
 """
 
 from __future__ import annotations
@@ -20,6 +28,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -36,6 +45,12 @@ def get_spark(
     """
     cpus = cpus or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    extra_conf = dict(extra_conf or {})
+    worker_path = [PACKAGE_ROOT] + [
+        p
+        for p in extra_conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+        if p
+    ]
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -83,8 +98,13 @@ def get_spark(
             "spark.python.sql.dataFrameDebugging.enabled",
             os.environ.get("SPARK_GRAFT_DF_DEBUGGING", "false"),
         )
+        .config("spark.python.daemon.module", "selium_spark.worker_daemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(dict.fromkeys(worker_path)),
+        )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -101,7 +121,7 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
         **{
             k: v
-            for k, v in (extra_conf or {}).items()
+            for k, v in extra_conf.items()
             if k.startswith(("spark.driver.", "spark.sql.codegen.cache."))
         },
     }

@@ -42,6 +42,10 @@ def replay_to_memory(
     ``state_store`` selects the provider for THIS query ('rocksdb' for
     disk-backed bounded-memory state — the 100 TB configuration; None
     keeps the session default).
+
+    Raises ``TimeoutError`` (after stopping the query) when the replay
+    has not drained within ``timeout_s``: a partial sink is never
+    returned as if complete.
     """
     import contextlib
     import os
@@ -78,6 +82,11 @@ def replay_to_memory(
             query.awaitTermination(timeout_s)
             if query.isActive:
                 query.stop()
+                spark.catalog.dropTempView(name)
+                raise TimeoutError(
+                    f"replay of {source_path} did not drain within "
+                    f"{timeout_s} s; the query was stopped"
+                )
             # materialize before the checkpoint dir disappears —
             # JVM-side (executor-stored blocks, freed by the
             # ContextCleaner once the frame is unreferenced), NOT a

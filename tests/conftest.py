@@ -89,7 +89,6 @@ SLOW_TESTS = {
     ("test_streaming.py", "test_streaming_funnel_late_rows_counted"),
     ("test_streaming.py", "test_streaming_gapfill_late_rows_counted_and_dropped"),
     ("test_streaming.py", "test_streaming_lsh_pairs_cap_semantics"),
-    ("test_streaming.py", "test_streaming_scd2_late_rows_counted_and_dropped"),
     ("test_training_ops.py", "test_bpe_apply_greedy_and_exhaustion"),
     ("test_training_ops.py", "test_simhash_hamming_pairs_matches_brute_force"),
 }

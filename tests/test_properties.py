@@ -281,3 +281,67 @@ def test_image_header_never_crashes_on_junk(junk):
 
     out = parse_media_header(junk)
     assert out is None or {"kind", "width", "height"} <= set(out)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(
+                st.integers(0, 3),  # key
+                st.integers(0, 5),  # ts inside the batch (ties allowed)
+                st.sampled_from(["x", "y", None]),  # state
+            ),
+            max_size=12,
+        ),
+        min_size=1,
+        max_size=4,
+    )
+)
+def test_scd2_fold_matches_lag_rule_across_batches(batches):
+    """streaming_scd2's vectorized fold, fed event-time-ordered batches,
+    collapses to the brute-force ``lag`` edge rule of scd2_history
+    (null states included), with each run closed by the next one."""
+    import pandas as pd
+
+    from selium_spark.operators.stateful import _scd2_fold
+
+    cols = ["_key", "ts_us", "tiebreak", "state"]
+    rows, stored, emitted = [], ([], [], [], []), []
+    for b, batch in enumerate(batches):
+        new = [(k, b * 10 + t, len(rows) + i, s) for i, (k, t, s) in enumerate(batch)]
+        rows += new
+        pdf = pd.DataFrame(new, columns=cols).astype(
+            {"_key": "int64", "ts_us": "int64", "tiebreak": "int64", "state": object}
+        )
+        out, stored, n_dropped = _scd2_fold(pdf, stored)
+        assert n_dropped == 0
+        if out is not None:
+            emitted += [
+                (k, s, vf, None if pd.isna(vt) else vt)
+                for k, s, vf, vt in out.itertuples(index=False)
+            ]
+
+    want = []
+    for key in {r[0] for r in rows}:
+        ordered = sorted((r for r in rows if r[0] == key), key=lambda r: r[1:3])
+        edges = [
+            r for i, r in enumerate(ordered)
+            if i == 0 or ordered[i - 1][3] is None
+            or (r[3] is not None and r[3] != ordered[i - 1][3])
+        ]
+        want += [
+            (key, e[3], e[1], edges[j + 1][1] if j + 1 < len(edges) else None)
+            for j, e in enumerate(edges)
+        ]
+
+    def collapse(runs):
+        """The readers' collapse: per (key, state, valid_from), the
+        smallest valid_to, an open (None) one counting as largest."""
+        out = {}
+        for k, s, vf, vt in runs:
+            vt = float("inf") if vt is None else vt
+            out[k, s, vf] = min(out.get((k, s, vf), vt), vt)
+        return out
+
+    assert collapse(emitted) == collapse(want)

@@ -515,8 +515,11 @@ def test_streaming_scd2_matches_batch_history(spark, tmp_path, state_buckets):
     """Two event-time-ordered micro-batches drive the per-key SCD2
     state to the same interval set as the batch window fold — including
     runs that OPEN in batch 1 and CLOSE in batch 2 (the cross-batch
-    state handoff). Parametrized over state_buckets: the hashed-bucket
-    state layout must be output-identical."""
+    state handoff), null states (the batch ``lag`` edge rule), two rows
+    at one ts ordered by tiebreak, a null key and a key touched only by
+    a late row in batch 2 (both dropped and counted). Parametrized over
+    state_buckets: the hashed-bucket state layout must be
+    output-identical."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import relational, stateful
@@ -526,19 +529,52 @@ def test_streaming_scd2_matches_batch_history(spark, tmp_path, state_buckets):
     ev = load_table(spark, "/root/testdata/sf0.001", "events").where(
         F.col("user_id") < 40
     )
-    src = str(tmp_path / "ev")
+    # every 7th change row carries a null state
+    ev = ev.withColumn(
+        "event_type",
+        F.when(F.col("event_id") % 7 == 0, F.lit(None)).otherwise(F.col("event_type")),
+    )
+    tmpl = ev.orderBy("event_id").limit(1)
+
+    def row(event_id, user_id, ts, event_type):
+        over = {
+            "event_id": F.lit(event_id),
+            "user_id": F.lit(user_id),
+            "ts": F.lit(ts),
+            "event_type": F.lit(event_type),
+        }
+        return tmpl.select(
+            *[over.get(c, F.col(c)).cast(t).alias(c) for c, t in ev.dtypes]
+        )
+
     cut = "2024-01-04"
-    ev.where(F.col("ts") < cut).coalesce(1).write.mode("append").parquet(src)
-    ev.where(F.col("ts") >= cut).coalesce(1).write.mode("append").parquet(src)
+    kept = [
+        # same ts: the smaller tiebreak (event_id) folds first
+        row(9_000_001, 9_001, "2024-01-02 10:00:00", "b"),
+        row(9_000_000, 9_001, "2024-01-02 10:00:00", "a"),
+        row(9_000_002, 9_001, "2024-01-05 10:00:00", "a"),
+        # a key whose batch-2 rows are all late
+        row(9_000_003, 9_002, "2024-01-03 12:00:00", "a"),
+    ]
+    null_key = row(9_000_004, None, "2024-01-02 00:00:00", "a")
+    late = row(9_000_005, 9_002, "2024-01-02 00:00:00", "b")
+    for r in kept:
+        ev = ev.unionByName(r)
+    src = str(tmp_path / "ev")
+    batch_1 = ev.where(F.col("ts") < cut).unionByName(null_key)
+    batch_2 = ev.where(F.col("ts") >= cut).unionByName(late)
+    batch_1.coalesce(1).write.mode("append").parquet(src)
+    batch_2.coalesce(1).write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
 
+    acc = spark.sparkContext.accumulator(0)
     snap = replay_to_memory(
         spark,
         src,
         schema,
         lambda s: stateful.streaming_scd2(
             s, "user_id", "event_type", "ts", "event_id",
-            state_buckets=state_buckets,
+            late_counter=acc, state_buckets=state_buckets,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -566,11 +602,22 @@ def test_streaming_scd2_matches_batch_history(spark, tmp_path, state_buckets):
         ).collect()
     }
     assert got == want and len(got) > 50
+    assert acc.value == 2
     # a real cross-batch closure exists: some run opens before the cut
     # and closes at/after it
     assert any(
         vf < _dt(cut) <= vt for (_, _, vf, vt) in want if vt.year < 9999
     )
+    # null states open runs of their own
+    assert sum(1 for w in want if w[1] is None) > 5
+    assert {w for w in want if w[0] == 9_001} == {
+        (9_001, "a", _dt("2024-01-02 10:00:00"), _dt("2024-01-02 10:00:00")),
+        (9_001, "b", _dt("2024-01-02 10:00:00"), _dt("2024-01-05 10:00:00")),
+        (9_001, "a", _dt("2024-01-05 10:00:00"), _dt("9999-12-31 00:00:00")),
+    }
+    assert {w for w in want if w[0] == 9_002} == {
+        (9_002, "a", _dt("2024-01-03 12:00:00"), _dt("9999-12-31 00:00:00")),
+    }
 
 
 def _dt(s):
@@ -2126,3 +2173,55 @@ def test_streaming_multi_touch_weights_synthetic(spark, tmp_path):
             if r["conversion_id"] == 14
         }
         assert b == expect
+
+
+def test_query_handle_drain_reraises_query_failure(spark, tmp_path):
+    """A query that failed must not look drained: ``drain`` re-raises
+    its StreamingQueryException at once instead of retrying until the
+    timeout and stopping the query as if it had finished."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from selium_spark.engine import QueryHandle
+
+    src = str(tmp_path / "src")
+    _write_events(spark, src, [(1, "2024-01-01 00:00:01", 5)])
+    schema = spark.read.parquet(src).schema
+    q = (
+        spark.readStream.schema(schema).parquet(src)
+        .select(F.when(F.col("v") > 0, F.raise_error(F.lit("boom"))).alias("v"))
+        .writeStream.queryName("drain_failure").format("memory")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    handle = QueryHandle(name="drain_failure", query=q, mode="park")
+    t0 = time.monotonic()
+    try:
+        with pytest.raises(StreamingQueryException, match="boom"):
+            handle.drain(timeout_s=60)
+    finally:
+        spark.catalog.dropTempView("drain_failure")
+    assert time.monotonic() - t0 < 30
+    assert not q.isActive
+
+
+def test_replay_to_memory_raises_when_not_drained(spark, tmp_path):
+    """A replay that outlives ``timeout_s`` is stopped and raises
+    TimeoutError; it never returns the partial sink as complete."""
+    import pytest
+
+    src = str(tmp_path / "src")
+    for i in range(3):
+        _write_keyed_events(spark, src, [(i, "2024-01-01 00:00:01", i, 0.0)])
+    schema = spark.read.parquet(src).schema
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        replay_to_memory(
+            spark,
+            src,
+            schema,
+            lambda s: s,
+            max_files_per_trigger=1,
+            timeout_s=0.01,
+        )
+    assert {q.id for q in spark.streams.active} == before
