@@ -96,8 +96,7 @@ def _enrich_fold(pdf: pd.DataFrame, current: dict, ts: str, config_cols, work_co
     (config before work at equal ts -> latest-wins, the ``select!``
     bias), put config values on their own rows, forward-fill seeded by
     the stored state, and read the work rows' as-of values straight
-    off the filled series. Module-level so the fold throughput can be
-    measured directly (scripts/bench_fold_throughput.py).
+    off the filled series.
 
     Returns ``(work-rows DataFrame with <cfg>_asof columns, new
     current-config dict)``.

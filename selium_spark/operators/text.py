@@ -483,7 +483,6 @@ def unigram_logppl(
     text_col: str = "text",
     id_col: str = "doc_id",
     pin: bool = True,
-    fold: str = "decimal",
 ) -> DataFrame:
     """CCNet-style perplexity quality filter with a self-trained
     unigram LM: per-doc mean negative log-likelihood of its tokens
@@ -491,31 +490,13 @@ def unigram_logppl(
     (low log-perplexity = typical text). The vocab (tiny vs corpus)
     is pinned (r9) then broadcast back.
 
-    ``fold`` picks the per-doc accumulation (same device as
-    :func:`bigram_interp_logppl`):
-
-    - ``"decimal"`` (default, r10): each token's nll double is cast to
-      DECIMAL(38,18) and summed with a plain groupBy — decimal
-      addition is exact, hence associative, hence order-free: no
-      position column, no collect_list, no per-doc array sort. The
-      oracle applies the identical cast.
-    - ``"list"``: the r9 shape — the per-doc sum folds in
-      token-position order over a sorted collect_list so the float
-      total is bit-identical to a list-fold oracle (group-agg partial
-      order would not be). Kept as the float-parity A/B baseline."""
-    if fold not in ("decimal", "list"):
-        raise ValueError(
-            f"unigram_logppl: fold must be 'decimal' or 'list', got {fold!r}"
-        )
-    if fold == "decimal":
-        # no position column needed — plain explode (the bigram device)
-        tok = df.select(
-            F.col(id_col), F.explode(tokens(text_col)).alias("token")
-        )
-    else:
-        tok = df.select(
-            F.col(id_col), F.posexplode(tokens(text_col)).alias("pos", "token")
-        )
+    The per-doc sum is an exact DECIMAL(38,18) fold (r10, the same
+    device as :func:`bigram_interp_logppl`): each token's nll double is
+    cast and summed with a plain groupBy — decimal addition is exact,
+    hence associative, hence order-free: no position column, no
+    collect_list, no per-doc array sort. The oracle applies the
+    identical cast."""
+    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
     # vocab pinned (r9, the PMI/bigram lesson): its total/nll branches
     # otherwise each rebuild the corpus tokenize+explode subtree
     vocab = _pin(
@@ -525,37 +506,13 @@ def unigram_logppl(
     nll = vocab.crossJoin(F.broadcast(total)).select(
         "token", (-F.log(F.col("tf") / F.col("total"))).alias("nll")
     )
-    joined = tok.join(F.broadcast(nll), "token")
-    if fold == "decimal":
-        # exact-arithmetic fold (r10, the bigram device): DECIMAL
-        # addition is associative, so no order, no collect_list, no
-        # per-doc array sort — one map-side-combinable aggregate. The
-        # oracle applies the identical cast.
-        out = joined.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.sum(F.col("nll").cast("decimal(38,18)")).alias("_s"),
-        ).select(
-            F.col(id_col),
-            F.col("n_tokens"),
-            F.round(
-                F.col("_s").cast("double") / F.col("n_tokens"), 9
-            ).alias("logppl"),
-        )
-        return out.withColumn("keep", F.col("logppl") <= threshold)
-    # fold="list": the r9 shape — position-ordered float fold over a
-    # sorted collect_list, the IDENTICAL IEEE chain as a list oracle.
-    # (The bigram twin's running-window rewrite was A/B'd on this op
-    # too and LOST: window 4.98 s vs list 4.49 s at the 100x SF.)
-    fold_col = F.aggregate(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "nll"))), lambda s: s["nll"]
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    out = joined.groupBy(id_col).agg(
+    out = tok.join(F.broadcast(nll), "token").groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_tokens"),
-        F.round(fold_col / F.count(F.lit(1)), 9).alias("logppl"),
+        F.sum(F.col("nll").cast("decimal(38,18)")).alias("_s"),
+    ).select(
+        F.col(id_col),
+        F.col("n_tokens"),
+        F.round(F.col("_s").cast("double") / F.col("n_tokens"), 9).alias("logppl"),
     )
     return out.withColumn("keep", F.col("logppl") <= threshold)
 
@@ -684,9 +641,6 @@ def bigram_interp_logppl(
     text_col: str = "text",
     id_col: str = "doc_id",
     round_to: int = 9,
-    pin: bool = True,
-    fold: str = "decimal",
-    prob: str = "window",
 ) -> DataFrame:
     """Jelinek-Mercer interpolated bigram LM perplexity, self-trained —
     the quality signal one LM order above :func:`unigram_logppl` (the
@@ -699,60 +653,29 @@ def bigram_interp_logppl(
     self-consistent, so no unseen-event smoothing is needed on the
     training corpus itself.
 
-    Plan shape — ``prob`` picks how the per-pair NLL table derives
-    from the pair counts (r12 rewrite, r11 verdict task #2: the
-    carried occ-explode floor):
+    Plan (r12): the three marginals are WINDOW sums over the single
+    pair-count aggregate — c1 = sum(c12) over (partition by w1), t2
+    over (partition by w2), N over the whole table — so the prob
+    branch is ONE subtree over one (w1, w2) aggregation: no
+    ctx/tgt/total self-joins, no localCheckpoint pin, and the scoring
+    join's strategy is left to AQE (broadcast when the pair table is
+    small, sort-merge when it isn't — do NOT hint it: a forced
+    broadcast is wrong at vocab^2 scale). Measured at the 100x SF,
+    warm-min interleaved ABAB: 4.7-5.5 s vs the r11 pinned-join
+    shape's 26.3 s same-session. Scale note: the N window is
+    partitionBy()-global — a single task streams the DISTINCT-PAIR
+    table (vocab^2-bounded, spillable). A doc-side total (sum of
+    max(len-1, 0) straight off the corpus — no explode) was
+    measured-REJECTED at 24.7 vs 4.7 s: its crossJoin(broadcast) below
+    the windows degrades the whole downstream plan.
 
-    - ``"window"`` (default): the three marginals are WINDOW sums
-      over the single pair-count aggregate — c1 = sum(c12) over
-      (partition by w1), t2 over (partition by w2), N over the whole
-      table — so the prob branch is ONE subtree over one (w1, w2)
-      aggregation: no ctx/tgt/total self-joins, no localCheckpoint
-      pin, and the scoring join's strategy is left to AQE (broadcast
-      when the pair table is small, sort-merge when it isn't — do
-      NOT hint it: a forced broadcast is wrong at vocab^2 scale).
-      Measured at the 100x SF, warm-min interleaved ABAB: 4.7-5.5 s
-      vs the r11 pinned-join shape's 26.3 s same-session (~99 s on
-      the r11 table's slower box) — the pin's materialization and
-      the 4-way pair-table fan-out were the floor, not the explode.
-      Scale note: the N window is partitionBy()-global — a single
-      task streams the DISTINCT-PAIR table (vocab^2-bounded,
-      spillable). A doc-side total (sum of max(len-1, 0) straight
-      off the corpus — no explode) was measured-REJECTED at 24.7 vs
-      4.7 s: its crossJoin(broadcast) below the windows degrades the
-      whole downstream plan.
-    - ``"join"``: the r9-r11 shape, kept for A/B — pair table
-      localCheckpointed (``pin``), marginals re-aggregated and
-      joined back. Two corpus traversals plus the pin cost.
-
-    Both derivations produce bit-identical nll (the marginal sums
-    are exact long arithmetic either way; the double expression is
-    the same), so the oracle does not distinguish them.
-
-    ``fold`` picks the per-doc accumulation (r10, judge task #4 — the
-    x100 GC floor):
-
-    - ``"decimal"`` (default): each occurrence's nll double is cast to
-      DECIMAL(38,18) and summed with a plain groupBy — decimal
-      addition is EXACT, hence associative, hence order-independent:
-      no position column, no per-doc window sort, no posexplode. The
-      oracle applies the identical cast (both engines round the same
-      double to 18 fractional digits, then integer arithmetic), so
-      cross-engine equality holds WITHOUT ordering. Measured at x100:
-      the fold side drops from a 26.6M-row sort+window to one
-      map-side-combinable aggregate.
-    - ``"window"``: the r9 shape — a running window SUM in ascending
-      position order executes the identical IEEE double chain as the
-      DuckDB list fold (bit-equality verified). Kept for parity with
-      float-fold oracles and as the A/B baseline."""
-    if fold not in ("decimal", "window"):
-        raise ValueError(
-            f"bigram_interp_logppl: fold must be 'decimal' or 'window', got {fold!r}"
-        )
-    if prob not in ("window", "join"):
-        raise ValueError(
-            f"bigram_interp_logppl: prob must be 'window' or 'join', got {prob!r}"
-        )
+    The per-doc accumulation is an exact fold (r10): each occurrence's
+    nll double is cast to DECIMAL(38,18) and summed with a plain
+    groupBy — decimal addition is EXACT, hence associative, hence
+    order-independent: no position column, no per-doc window sort, no
+    posexplode. The oracle applies the identical cast (both engines
+    round the same double to 18 fractional digits, then integer
+    arithmetic), so cross-engine equality holds WITHOUT ordering."""
     toks = tokens(text_col)
     pairs_col = F.filter(
         F.zip_with(
@@ -764,100 +687,40 @@ def bigram_interp_logppl(
         ),
         lambda s: s.isNotNull(),
     )
-    if fold == "decimal":
-        occ = df.select(
-            F.col(id_col), F.explode(pairs_col).alias("p")
-        ).select(id_col, "p.w1", "p.w2")
-    else:
-        occ = df.select(
-            F.col(id_col), F.posexplode(pairs_col).alias("pos", "p")
-        ).select(id_col, "pos", "p.w1", "p.w2")
-    if prob == "window":
-        pairs = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-        w1w = Window.partitionBy("w1")
-        w2w = Window.partitionBy("w2")
-        allw = Window.partitionBy()
-        prob_df = pairs.select(
-            "w1",
-            "w2",
-            (
-                -F.log(
-                    F.lit(lam) * (F.col("c12") / F.sum("c12").over(w1w))
-                    + F.lit(1.0 - lam)
-                    * (F.sum("c12").over(w2w) / F.sum("c12").over(allw))
-                )
-            ).alias("nll"),
-        )
-    else:
-        pairs = _pin(
-            occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12")), pin
-        )
-        ctx = pairs.groupBy("w1").agg(F.sum("c12").alias("c1"))
-        tgt = pairs.groupBy("w2").agg(F.sum("c12").alias("t2"))
-        total = pairs.agg(F.sum("c12").alias("n_big"))
-        prob_df = (
-            pairs.join(ctx, "w1")
-            .join(tgt, "w2")
-            .crossJoin(F.broadcast(total))
-            .select(
-                "w1",
-                "w2",
-                (
-                    -F.log(
-                        F.lit(lam) * (F.col("c12") / F.col("c1"))
-                        + F.lit(1.0 - lam) * (F.col("t2") / F.col("n_big"))
-                    )
-                ).alias("nll"),
+    occ = df.select(
+        F.col(id_col), F.explode(pairs_col).alias("p")
+    ).select(id_col, "p.w1", "p.w2")
+    pairs = occ.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
+    w1w = Window.partitionBy("w1")
+    w2w = Window.partitionBy("w2")
+    allw = Window.partitionBy()
+    prob_df = pairs.select(
+        "w1",
+        "w2",
+        (
+            -F.log(
+                F.lit(lam) * (F.col("c12") / F.sum("c12").over(w1w))
+                + F.lit(1.0 - lam)
+                * (F.sum("c12").over(w2w) / F.sum("c12").over(allw))
             )
-        )
-    joined = occ.join(prob_df, ["w1", "w2"])
-    if fold == "decimal":
-        # exact-arithmetic fold (r10): DECIMAL(38,18) addition is
-        # associative, so the sum needs no order — ONE map-side-
-        # combinable aggregate replaces the exchange + per-doc sort +
-        # three window passes below. Column-pruned to (id, nll) before
-        # the shuffle; nll ~ [0, 45] so 20 integer digits never
-        # overflow at any real doc length.
-        return (
-            joined.select(F.col(id_col), F.col("nll").cast("decimal(38,18)").alias("_d"))
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).alias("n_bigrams"),
-                F.sum("_d").alias("_s"),
-            )
-            .select(
-                F.col(id_col),
-                F.col("n_bigrams"),
-                F.round(
-                    F.col("_s").cast("double") / F.col("n_bigrams"), round_to
-                ).alias("bigram_logppl"),
-            )
-        )
-    # position-ordered fold WITHOUT collect_list (r9): the running
-    # window sum accumulates row-by-row in frame order, so it performs
-    # the identical IEEE addition sequence as the sorted-array fold it
-    # replaces (acc + nll in ascending pos) — bit-identical, and ONE
-    # exchange + ONE per-doc sort instead of the ObjectHashAggregate
-    # that shuffled every (pos, nll) struct and array-sorted per doc
-    # (the x100 cost after the pair-table pin: 54.5 -> see BASELINE r9)
-    w_run = (
-        Window.partitionBy(id_col)
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).alias("nll"),
     )
-    w_all = Window.partitionBy(id_col)
+    # Column-pruned to (id, nll) before the shuffle; nll ~ [0, 45] so
+    # 20 integer digits never overflow at any real doc length.
     return (
-        joined.withColumn("_run", F.sum("nll").over(w_run))
-        .withColumn("_n", F.count(F.lit(1)).over(w_all))
-        .withColumn(
-            "_rn",
-            F.row_number().over(Window.partitionBy(id_col).orderBy("pos")),
+        occ.join(prob_df, ["w1", "w2"])
+        .select(F.col(id_col), F.col("nll").cast("decimal(38,18)").alias("_d"))
+        .groupBy(id_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_bigrams"),
+            F.sum("_d").alias("_s"),
         )
-        .where(F.col("_rn") == F.col("_n"))
         .select(
             F.col(id_col),
-            F.col("_n").alias("n_bigrams"),
-            F.round(F.col("_run") / F.col("_n"), round_to).alias("bigram_logppl"),
+            F.col("n_bigrams"),
+            F.round(
+                F.col("_s").cast("double") / F.col("n_bigrams"), round_to
+            ).alias("bigram_logppl"),
         )
     )
 
@@ -1158,8 +1021,6 @@ def remove_dup_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     out_col: str = "clean_text",
-    storage: str = "persist",
-    build: str = "twopass",
 ) -> DataFrame:
     """Duplicated-span REMOVAL — the rewrite half of "Deduplicating
     Training Data Makes Language Models Better" (Lee et al. 2022) at
@@ -1170,190 +1031,75 @@ def remove_dup_spans(
     their one short gram (ngrams_all semantics), so boilerplate
     shorter than the shingle width is still removable.
 
-    Plan — ``build`` picks the construction (r12 rewrite, r11 verdict
-    task #3: the carried positional-build floor):
+    Plan (r13 doc-level fold; guide §8 / §2.3: decide with small rows,
+    touch the payload once). NO pin anywhere, three column-pruned
+    corpus scans:
 
-    - ``"twopass"`` (default): NO pin anywhere. The hot-shingle set
-      comes from a cheap NON-positional first pass — explode of the
-      per-doc-DISTINCT shingles, so a plain count(*) per shingle IS
-      the distinct-doc count (the dup_span_stats device: map-side
-      combinable, no count_distinct) — and the two positional
-      consumers (covered-interval build, marked fold) each rebuild a
-      COLUMN-PRUNED posexplode subtree: (pos, sh, _len) for coverage,
-      (pos, w) for the fold. Two cheap codegen'd traversals beat one
-      full-width materialization: the r11 pinned build spent 5.7 of
-      8.7 s writing the positional table to storage. Measured at the
-      100x SF (ABAB, clearCache between reps): 11.4 vs 27.0 s
-      warm-min, and base sf0.1 8.2 -> 3.3 s. The stop-shingle
-      pre-filter idea this experiment was carried under is moot in
-      this shape: the hot aggregation it would have trimmed is the
-      CHEAP branch here (per-doc-distinct + partial agg), not the
-      floor.
-    - ``"fold"`` (r13): the twopass hot set, then ONE positional pass
-      that ships only (id, covered-interval) metadata — per-doc
-      covered-position arrays aggregate doc-level, join back to the
-      corpus doc-level, and the cut applies in place with
-      array_except + transform (order-preserving, no per-doc sort).
-      No token row ever crosses an exchange; the twopass shape
-      shuffled token-level rows twice (covered distinct + marked join
-      + collect_list fold). Guide §8 / §2.3: decide with small rows,
-      touch the payload once.
-    - ``"pinned"``: the r8-r11 shape — one positional posexplode
-      persisted and pinned with a count() before its three consumers
-      fan out. ``storage`` picks the pin: ``"persist"`` caches in
-      executor storage (lives until ``clearCache()``);
-      ``"checkpoint"`` routes through ``dedup._truncate_lineage`` (a
-      reliable ``checkpoint()`` when a checkpoint dir is set — fast
-      cluster storage — else an eager ``localCheckpoint()``).
-      Kept for A/B and for corpora where re-tokenization is
-      genuinely expensive relative to storage (not this one).
+    - the hot-shingle set comes from a cheap NON-positional pass —
+      explode of the per-doc-DISTINCT shingles, so a plain count(*)
+      per shingle IS the distinct-doc count (the dup_span_stats
+      device: map-side combinable, no count_distinct);
+    - ONE positional pass ships only (id, covered-interval) metadata:
+      hot-shingle hits aggregate into one covered-position array per
+      doc;
+    - that array joins back to the corpus doc-level and the cut
+      applies in place with array_except(sequence(0, len-1), covered)
+      + transform — order-preserving, no per-doc sort.
 
-    Both builds are output-identical (parity-tested). The fold
-    re-assembles uncovered (pos, token) structs with array_sort —
-    bounded by document size, never corpus size. Nothing touches the
-    driver.
+    No token row ever crosses an exchange. Exchanges: hot agg +
+    interval agg + doc join (broadcast at bench scale). Measured 2.0x
+    faster than the r12 token-level two-pass build at sf0.1 and the
+    100x SF (OPTIMIZATION_r13.md S2.1). Nothing is collected.
 
     Returns (id, n_tokens, n_kept, out_col); a fully-covered doc keeps
     an empty string rather than vanishing (a zero-token doc has no
     positions and is absent on both engines).
     """
-    if storage not in ("persist", "checkpoint"):
-        raise ValueError(
-            f"storage must be 'persist' or 'checkpoint', got {storage!r}"
-        )
-    if build not in ("twopass", "pinned", "fold"):
-        raise ValueError(
-            f"build must be 'twopass', 'pinned' or 'fold', got {build!r}"
-        )
     toks = tokens(text_col)
     grams = ngrams_all(text_col, n)
-    if build == "fold":
-        # r13: decide with small rows, touch the payload once (guide
-        # §8 / §2.3). The twopass shape still shuffled TOKEN-level rows
-        # twice (covered (id,pos) distinct; marked (id,pos,w) left join
-        # + groupBy collect_list + per-doc array_sort). Here the
-        # positional pass carries only (id, pos-interval) metadata:
-        # hot-shingle hits aggregate into ONE covered-position array
-        # per doc, and the fold applies that array to the token array
-        # in place — array_except(sequence(0, len-1), covered) keeps
-        # order and needs no sort, no token ever crosses an exchange,
-        # and the only corpus-payload join is doc-level. Exchanges:
-        # hot agg + interval agg + doc join (broadcast at bench scale)
-        # vs twopass's 4 token-level ones. Output identical to the
-        # other builds (parity-tested): n_tokens = token count, fully
-        # covered docs keep '', zero-token docs are absent.
-        hot = (
-            df.select(F.explode(F.array_distinct(grams)).alias("sh"))
-            .groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") >= min_docs)
-            .select("sh")
-        )
-        cov = (
-            df.select(
-                F.col(id_col),
-                F.size(toks).alias("_len"),
-                F.posexplode(grams).alias("pos", "sh"),
-            )
-            .join(hot, "sh")
-            .select(
-                id_col,
-                F.sequence(
-                    F.col("pos"),
-                    F.least(F.col("pos") + F.lit(n - 1), F.col("_len") - 1),
-                ).alias("_iv"),
-            )
-            .groupBy(id_col)
-            .agg(F.flatten(F.collect_list("_iv")).alias("_cov"))
-        )
-        kept = F.array_except(
-            F.sequence(F.lit(0), F.size("_toks") - F.lit(1)),
-            F.coalesce(F.col("_cov"), F.array().cast("array<int>")),
-        )
-        return (
-            df.select(F.col(id_col), toks.alias("_toks"))
-            .where(F.size("_toks") > 0)
-            .join(cov, id_col, "left")
-            .select(
-                id_col,
-                F.size("_toks").cast("long").alias("n_tokens"),
-                F.size(kept).cast("long").alias("n_kept"),
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        kept, lambda p: F.element_at(F.col("_toks"), p + 1)
-                    ),
-                ).alias(out_col),
-            )
-        )
-    padded = F.concat(
-        grams,
-        F.array_repeat(
-            F.lit(None).cast("string"), F.size(toks) - F.size(grams)
-        ),
+    hot = (
+        df.select(F.explode(F.array_distinct(grams)).alias("sh"))
+        .groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("_nd"))
+        .where(F.col("_nd") >= min_docs)
+        .select("sh")
     )
-    zipped = F.zip_with(
-        toks, padded, lambda a, b: F.struct(a.alias("w"), b.alias("sh"))
-    )
-    base = df.select(
-        F.col(id_col),
-        F.size(toks).alias("_len"),
-        F.posexplode(zipped).alias("pos", "_z"),
-    ).select(id_col, "_len", "pos", "_z.w", "_z.sh")
-    if build == "twopass":
-        hot = (
-            df.select(F.explode(F.array_distinct(grams)).alias("sh"))
-            .groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("_nd"))
-            .where(F.col("_nd") >= min_docs)
-            .select("sh")
+    cov = (
+        df.select(
+            F.col(id_col),
+            F.size(toks).alias("_len"),
+            F.posexplode(grams).alias("pos", "sh"),
         )
-    elif storage == "checkpoint":
-        from .dedup import _truncate_lineage
-
-        base = _truncate_lineage(base)
-    else:
-        base = base.persist()
-        # pin: tokenize+ngram executes once, consumers read the cache
-        base.count()
-    if build == "pinned":
-        hot = (
-            base.where(F.col("sh").isNotNull())
-            .groupBy("sh")
-            .agg(F.count_distinct(F.col(id_col)).alias("_nd"))
-            .where(F.col("_nd") >= min_docs)
-            .select("sh")
-        )
-    covered = (
-        base.where(F.col("sh").isNotNull())
         .join(hot, "sh")
         .select(
-            F.col(id_col),
-            F.explode(
-                F.sequence(
-                    F.col("pos"),
-                    F.least(F.col("pos") + F.lit(n - 1), F.col("_len") - 1),
-                )
-            ).alias("pos"),
+            id_col,
+            F.sequence(
+                F.col("pos"),
+                F.least(F.col("pos") + F.lit(n - 1), F.col("_len") - 1),
+            ).alias("_iv"),
         )
-        .distinct()
-        .withColumn("_cut", F.lit(True))
+        .groupBy(id_col)
+        .agg(F.flatten(F.collect_list("_iv")).alias("_cov"))
     )
-    marked = base.select(id_col, "pos", "w").join(
-        covered, [id_col, "pos"], "left"
+    kept = F.array_except(
+        F.sequence(F.lit(0), F.size("_toks") - F.lit(1)),
+        F.coalesce(F.col("_cov"), F.array().cast("array<int>")),
     )
-    kept_struct = F.when(F.col("_cut").isNull(), F.struct("pos", "w"))
-    return marked.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.sum(F.when(F.col("_cut").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_kept"),
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(F.collect_list(kept_struct)), lambda s: s["w"]
-            ),
-        ).alias(out_col),
+    return (
+        df.select(F.col(id_col), toks.alias("_toks"))
+        .where(F.size("_toks") > 0)
+        .join(cov, id_col, "left")
+        .select(
+            id_col,
+            F.size("_toks").cast("long").alias("n_tokens"),
+            F.size(kept).cast("long").alias("n_kept"),
+            F.concat_ws(
+                " ",
+                F.transform(
+                    kept, lambda p: F.element_at(F.col("_toks"), p + 1)
+                ),
+            ).alias(out_col),
+        )
     )
 
 
@@ -1576,17 +1322,18 @@ def bpe_token_counts(
     needed, the merge rules don't have to rewrite every token
     occurrence (6 merges x ~5 string copies each). The merge stack
     runs once per DISTINCT word (Heaps' law: vocab << occurrences),
-    the per-word subword count broadcast-joins back onto the exploded
-    tokens, and one doc-level sum re-aggregates. Identical numbers by
+    the per-word subword count joins back onto the exploded tokens,
+    and one doc-level sum re-aggregates. Identical numbers by
     construction: n_bpe = sum over occurrences of n_sub(word) =
     size(flatten(transform(tokens, apply))); a zero-token doc keeps
     (0, 0) via the left join, matching size(flatten([])) = 0.
 
     Streaming twins must keep :func:`bpe_apply`'s per-row map (a
     groupBy is not append-legal); this is the batch half only. The
-    vocab table is corpus-sublinear but not constant — the planner
-    falls back to a shuffled join past the broadcast threshold, which
-    still beats per-occurrence rewriting whenever vocab << tokens.
+    vocab table is corpus-sublinear but not constant, so the join is
+    not hinted: the planner broadcasts it under the broadcast threshold
+    and falls back to a shuffled join past it, which still beats
+    per-occurrence rewriting whenever vocab << tokens.
     """
 
     def n_sub(w: Column) -> Column:
@@ -1600,7 +1347,7 @@ def bpe_token_counts(
         "_w", n_sub(F.col("_w")).alias("_n")
     )
     per_doc = (
-        words.join(F.broadcast(per_word), "_w")
+        words.join(per_word, "_w")
         .groupBy(id_col)
         .agg(
             F.sum("_n").cast("long").alias("n_bpe"),

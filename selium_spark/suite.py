@@ -7138,7 +7138,7 @@ def text_remove_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     token string ever crosses an exchange), and the doc-level fold
     that applies the arrays in place (array_except + transform)."""
     docs = _t(spark, sf_dir, "documents")
-    return text.remove_dup_spans(docs, n=5, min_docs=2, build="fold")
+    return text.remove_dup_spans(docs, n=5, min_docs=2)
 
 
 SQL_REMOVE_DUP_SPANS = r"""

@@ -23,7 +23,6 @@ SF_ORACLE_DIR = os.environ.get("SELIUM_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 SLOW_TESTS = {
     ("test_operators.py", "test_asof_join_keyless_bucketed"),
     ("test_operators.py", "test_asof_join_matches_pandas_merge_asof"),
-    ("test_operators.py", "test_bigram_prob_window_matches_join"),
     ("test_operators.py", "test_dhash_hamming_star_and_drop_overflow"),
     ("test_operators.py", "test_embedding_neardup_banded_default_matches_exact"),
     ("test_operators.py", "test_expect_unique_approx_composes_with_other_rules"),

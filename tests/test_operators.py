@@ -281,7 +281,7 @@ def test_grouped_entropy_large_keys_with_null_sibling(spark):
 
 
 @pytest.mark.parametrize(
-    "op", ["bm25", "logppl", "bigram_counts", "bigram_ppl", "budget", "pmi"]
+    "op", ["bm25", "logppl", "bigram_counts", "budget", "pmi"]
 )
 def test_text_pin_escape_hatch(spark, op):
     """pin=False (r10, ADVICE): every localCheckpoint-pinned text
@@ -305,8 +305,6 @@ def test_text_pin_escape_hatch(spark, op):
             out = text.unigram_logppl(docs, pin=pin)
         elif op == "bigram_counts":
             out = text.bigram_lm_counts(docs, pin=pin)
-        elif op == "bigram_ppl":
-            out = text.bigram_interp_logppl(docs, pin=pin)
         elif op == "budget":
             out = text.token_budget_select(docs, 25, pin=pin)
         else:
@@ -316,34 +314,49 @@ def test_text_pin_escape_hatch(spark, op):
     assert run(True) == run(False)
 
 
-@pytest.mark.parametrize("fold", ["decimal", "window"])
-def test_bigram_prob_window_matches_join(spark, fold):
-    """prob='window' (r12, the occ-floor rewrite): window-sum
-    marginals over the single pair aggregate must be bit-identical to
-    the legacy pinned-join derivation, under BOTH per-doc folds."""
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat the cat ran"),
-            (2, "a dog and a cat and a bird"),
-            (3, "the quick brown fox jumps over the lazy dog"),
-            (4, "cat cat cat dog dog bird"),
-            (5, "x"),
-        ],
-        "doc_id LONG, text STRING",
-    )
-    win = sorted(
-        map(tuple, text.bigram_interp_logppl(docs, fold=fold, prob="window").collect())
-    )
-    join = sorted(
-        map(tuple, text.bigram_interp_logppl(docs, fold=fold, prob="join").collect())
-    )
-    assert win == join and len(win) == 4  # the 1-token doc has no bigrams
+def test_bigram_interp_logppl_hand_corpus(spark):
+    """Values against a pure-Python reference: pair counts, the
+    Jelinek-Mercer mix with lam=0.7 from the corpus's own marginals,
+    then the exact DECIMAL(38,18) per-doc sum, mean rounded to 9
+    places. The 1-token doc has no bigrams and is absent."""
+    import math
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
 
+    rows = [
+        (1, "the cat sat on the mat the cat ran"),
+        (2, "a dog and a cat and a bird"),
+        (3, "the quick brown fox jumps over the lazy dog"),
+        (4, "cat cat cat dog dog bird"),
+        (5, "x"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    lam = 0.7
+    occ = {i: list(zip(t.split(), t.split()[1:])) for i, t in rows}
+    c12 = Counter(p for ps in occ.values() for p in ps)
+    c1, t2 = Counter(), Counter()
+    for (w1, w2), c in c12.items():
+        c1[w1] += c
+        t2[w2] += c
+    n_big = sum(c12.values())
 
-def test_bigram_rejects_bad_prob(spark):
-    docs = spark.createDataFrame([(1, "a b")], "doc_id LONG, text STRING")
-    with pytest.raises(ValueError, match="prob must be"):
-        text.bigram_interp_logppl(docs, prob="magic")
+    def nll(w1, w2):
+        d = -math.log(
+            lam * (c12[w1, w2] / c1[w1]) + (1.0 - lam) * (t2[w2] / n_big)
+        )
+        return Decimal(repr(d)).quantize(Decimal("1e-18"), ROUND_HALF_UP)
+
+    want = {}
+    for i, ps in occ.items():
+        if ps:
+            mean = float(sum(nll(*p) for p in ps)) / len(ps)
+            q = Decimal(repr(mean)).quantize(Decimal("1e-9"), ROUND_HALF_UP)
+            want[i] = (len(ps), float(q))
+    got = {
+        r["doc_id"]: (r["n_bigrams"], r["bigram_logppl"])
+        for r in text.bigram_interp_logppl(docs, lam=lam).collect()
+    }
+    assert got == want and set(got) == {1, 2, 3, 4}
 
 
 def test_lang_id_and_quality(spark):

@@ -370,10 +370,10 @@ def test_budget_head_running_sum_stays_bucket_partitioned(spark):
 
 
 def test_remove_dup_spans_three_pruned_scans_no_pin(spark):
-    """remove_dup_spans build='twopass' (r12): NO persisted pin —
+    """remove_dup_spans (r13 doc-level fold): NO persisted pin —
     exactly three column-pruned corpus scans (the non-positional hot
-    pass reads text only; the covered and marked positional passes
-    read doc_id+text), no InMemoryTableScan left pinning executor
+    pass reads text only; the covered-interval pass and the doc-level
+    fold read doc_id+text), no InMemoryTableScan left pinning executor
     storage for the session, and no cartesian product."""
     p = plan_of(spark, "text_remove_dup_spans")
     scans = [rs for rs in p.read_schemas if "text" in rs]
@@ -452,10 +452,26 @@ def test_bpe_tokenize_apply_is_narrow(spark):
 
 def test_bpe_tokenize_counts_via_broadcast_vocab(spark):
     """Batch text_bpe_tokenize (r13): the merge stack runs once per
-    DISTINCT word and the per-word counts BROADCAST back onto the
-    exploded tokens — never a shuffle of the corpus keyed on word for
-    the re-attach, no Python nodes, no cartesian."""
+    DISTINCT word and, at this scale, the planner broadcasts the
+    per-word counts back onto the exploded tokens — never a shuffle of
+    the corpus keyed on word for the re-attach, no Python nodes, no
+    cartesian."""
     p = plan_of(spark, "text_bpe_tokenize")
     assert p.n_broadcast_joins >= 1, p.text
     assert "Python" not in p.text
     assert not p.has_cartesian
+
+
+def test_bpe_token_counts_join_not_forced_broadcast(spark):
+    """The per-word count table is corpus-sublinear, not constant, so
+    bpe_token_counts leaves the re-attach join to the planner: with
+    broadcasting disabled it must plan no BroadcastHashJoin at all (a
+    forced ``F.broadcast`` hint would still plan one)."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        p = plan_of(spark, "text_bpe_tokenize")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert p.n_broadcast_joins == 0, p.text
+    assert p.n_sortmerge_joins >= 1, p.text

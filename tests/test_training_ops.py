@@ -610,35 +610,6 @@ def test_remove_dup_spans_cuts_shared_spans_only(spark):
     # the 3-token doc's single short gram is shared by docs 4 and 5
     assert out[4].clean_text == "" and out[5].clean_text == ""
     assert all(out[i].n_tokens - out[i].n_kept >= 0 for i in out)
-    # cross-build parity (r12/r13): `out` is the default twopass
-    # build; the r13 doc-level fold build and the legacy pinned build
-    # — both storage flavors — must all agree
-    fold = {
-        r.doc_id: r
-        for r in text.remove_dup_spans(
-            docs, n=5, min_docs=2, build="fold"
-        ).collect()
-    }
-    assert {i: (r.clean_text, r.n_kept, r.n_tokens) for i, r in fold.items()} == {
-        i: (r.clean_text, r.n_kept, r.n_tokens) for i, r in out.items()
-    }
-    for storage in ("persist", "checkpoint"):
-        chk = {
-            r.doc_id: r
-            for r in text.remove_dup_spans(
-                docs, n=5, min_docs=2, build="pinned", storage=storage
-            ).collect()
-        }
-        assert {i: (r.clean_text, r.n_kept) for i, r in chk.items()} == {
-            i: (r.clean_text, r.n_kept) for i, r in out.items()
-        }, storage
-    spark.catalog.clearCache()  # drop the pinned build's persist
-    import pytest
-
-    with pytest.raises(ValueError):
-        text.remove_dup_spans(docs, storage="bogus")
-    with pytest.raises(ValueError):
-        text.remove_dup_spans(docs, build="onepass")
 
 
 def test_token_budget_select_boundary(spark):
