@@ -1005,55 +1005,6 @@ def latency_main(n: int = 10) -> None:
     )
 
 
-def fold_buckets_main(n: int = 10) -> None:
-    """Round-6 verdict task #5: does the streaming_lsh_pairs
-    state-bucket trick (hash many keys into one applyInPandasWithState
-    group, fold per key inside the pandas groupby) pay off for the
-    PER-KEY folds too?  A/B on the representative gapfill fold over the
-    Nx corpus (~15k distinct users/trigger at N=10), one file per
-    trigger (the sustained-backlog cadence where per-group overhead
-    shows), RocksDB state."""
-    spark = get_spark(app_name="fold_buckets", cpus=32, shuffle_partitions=32)
-    from selium_spark.operators import stateful
-    from selium_spark.sources.tables import ensure_nanos_as_long
-    from selium_spark.suite import _norm_stream_ts
-
-    ensure_nanos_as_long(spark)
-    src_dir = f"/root/repo/tmp/stream_x{n}"
-    dest = f"{src_dir}/events.parquet"
-    if not os.path.exists(dest):
-        print(f"building {n}x streaming corpus at {src_dir} ...", file=sys.stderr)
-        build_stream_scaled(spark, n, src_dir)
-    schema = spark.read.parquet(dest).schema
-    report = {}
-    for sb in (None, 64, 256, 1024):
-        m = stream_replay_metrics(
-            spark,
-            dest,
-            schema,
-            lambda s, sb=sb: stateful.streaming_gapfill_locf(
-                _norm_stream_ts(s, schema),
-                "user_id",
-                "ts",
-                "value",
-                "event_id",
-                grain="day",
-                state_buckets=sb,
-            ),
-            "update",
-            "rocksdb",
-            max_files=1,
-        )
-        key = "per_key" if sb is None else f"buckets_{sb}"
-        report[key] = m
-        print(f"  gapfill {key}: {m}", file=sys.stderr)
-    base = report["per_key"]["wall_s"]
-    for key, m in report.items():
-        m["ratio_vs_per_key"] = round(m["wall_s"] / max(base, 0.01), 2)
-    print(json.dumps({"mode": "fold_buckets", "scale": n, "queries": report},
-                     indent=2))
-
-
 def streaming_main(scales: list[int]) -> None:
     spark = get_spark(app_name="stream_stress", cpus=32, shuffle_partitions=32)
     from selium_spark.sources.tables import ensure_nanos_as_long
@@ -1161,9 +1112,6 @@ def main() -> None:
         return
     if "--ann" in sys.argv:
         ann_main(int(args[0]) if args else 100, skew="--skew" in sys.argv)
-        return
-    if "--fold-buckets" in sys.argv:
-        fold_buckets_main(int(args[0]) if args else 10)
         return
     if "--streaming-latency" in sys.argv:
         latency_main(int(args[0]) if args else 10)

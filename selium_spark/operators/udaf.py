@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .stateful import check_buckets
+
 
 def grouped_entropy(
     df: DataFrame,
@@ -28,7 +30,7 @@ def grouped_entropy(
     cat_col: str,
     out_col: str = "entropy",
     round_to: int = 6,
-    buckets: int | str | None = "auto",
+    buckets: int | str = "auto",
 ) -> DataFrame:
     """Shannon entropy (bits) of the per-key category distribution.
 
@@ -46,17 +48,18 @@ def grouped_entropy(
     - ``buckets`` hashes keys into N applyInPandas groups with a pandas
       groupby inside (the `_bucketed_fold` layout): ONE Python call per
       bucket instead of one per key — the per-group invocation overhead
-      was ~75-90% of this operator's wall (3.0 s per-key -> 0.8 s at
-      sf0.1's 1.5k keys, BASELINE.md r8). ``"auto"`` uses 2x the
+      was ~75-90% of this operator's wall (3.0 s with one group per key
+      -> 0.8 s at sf0.1's 1.5k keys, BASELINE.md r8). ``"auto"`` uses 2x the
       session's default parallelism: BATCH bucketing only needs enough
       groups to keep the cores busy, unlike the streaming heuristic
       (32x) whose bucket count also amortizes per-trigger state
       commits — the sweep at 1.5k keys read 0.77/0.91/1.18 s at
       64/128/256 buckets (fewer calls wins until a bucket's pandas
       frame stops fitting comfortably; raise buckets with corpus
-      size). ``None`` keeps the one-call-per-key layout
-      (output-identical, pinned by test parametrization).
+      size). An int pins the count; anything else raises
+      ``ValueError`` when the function is called.
     """
+    check_buckets(buckets, "buckets")
     # NULL keys ride a separate boolean flag, and _k itself is made
     # non-nullable (coalesce to 0) BEFORE the frame ships to pandas
     # (r10, ADVICE): Arrow converts an int64 column containing nulls to
@@ -89,20 +92,6 @@ def grouped_entropy(
             [pd.NA if kn else int(k) for k, kn in zip(ks, nulls)],
             dtype="Int64",
         )
-
-    if buckets is None:
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            n, e = entropy_of(pdf)
-            return pd.DataFrame(
-                {
-                    key: keys_out([pdf["_k"].iloc[0]],
-                                  [bool(pdf["_kn"].iloc[0])]),
-                    "n_events": [n],
-                    out_col: [e],
-                }
-            )
-
-        return counts.groupBy("_k", "_kn").applyInPandas(fn, schema=out_schema)
 
     def bucket_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         # The (coalesced) key column is NaN-free, but grouping includes

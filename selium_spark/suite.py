@@ -5154,10 +5154,8 @@ def stream_gapfill_locf_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _norm_stream_ts(stream, schema)
         from .operators.stateful import streaming_gapfill_locf as op
 
-        # per-key layout graded on purpose (the bucketed layout is
-        # graded via the 256-pinned twins; default is now 'auto')
         return op(ev, "user_id", "ts", "value", "event_id", grain="week",
-                  state_buckets=None)
+                  state_buckets=256)
 
     snap = replay_to_memory(
         spark, f"{sf_dir}/events.parquet", schema, transform,
@@ -5198,9 +5196,8 @@ def stream_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
         from .operators.stateful import streaming_gapfill_locf as op
 
-        # per-key layout graded on purpose (see the weekly twin note)
         return op(ev, "user_id", "ts", "value", "event_id", grain="day",
-                  state_buckets=None)
+                  state_buckets=256)
 
     snap = replay_to_memory(
         spark, f"{sf_dir}/events.parquet", schema, transform,
@@ -5272,9 +5269,8 @@ def stream_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
         from .operators.stateful import streaming_gapfill_interp as op
 
-        # per-key layout graded on purpose (see the weekly twin note)
         return op(ev, "user_id", "ts", "value", "event_id", grain="day",
-                  state_buckets=None)
+                  state_buckets=256)
 
     snap = replay_to_memory(
         spark, f"{sf_dir}/events.parquet", schema, transform,
@@ -5588,9 +5584,8 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is just the open run — and the replayed snapshot, collapsed
     of stale open-interval emissions, must equal the batch
     q_scd2_user_state fold (same DuckDB oracle). Runs the r7-adopted
-    hashed-bucket state layout (state_buckets=256, output-identical —
-    BASELINE.md A/B); the per-key layout stays graded via the gapfill
-    family and the parametrized parity tests."""
+    hashed-bucket state layout pinned at state_buckets=256 (BASELINE.md
+    A/B)."""
     from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
@@ -6519,7 +6514,7 @@ def stream_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot must equal the batch closed form (same SQL_CUSUM oracle as
     ts_cusum_alarms). Open-period re-emissions collapse by max_by on
     the rows-folded marker. Runs the r7-adopted hashed-bucket state
-    layout (state_buckets=256, output-identical — BASELINE.md A/B)."""
+    layout pinned at state_buckets=256 (BASELINE.md A/B)."""
     from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 
@@ -6634,8 +6629,8 @@ def stream_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     last closed period plus the open period's exact fixed-point
     partials. Collapsed snapshot == batch op (same SQL_EWMA_LEVEL
     oracle); the HALF_UP round happens Spark-side on the raw double.
-    Runs the r7-adopted hashed-bucket state layout (state_buckets=256,
-    output-identical — BASELINE.md A/B)."""
+    Runs the r7-adopted hashed-bucket state layout pinned at
+    state_buckets=256 (BASELINE.md A/B)."""
     from .sources.tables import ensure_nanos_as_long
     from .streaming.replay import replay_to_memory
 

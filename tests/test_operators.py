@@ -1750,11 +1750,11 @@ def test_ohlc_bars_grains(spark):
         windows.ohlc_bars(df, "ts", ["k"], "value", "event_id", "month")
 
 
-@pytest.mark.parametrize("buckets", [None, 8, "auto"])
+@pytest.mark.parametrize("buckets", [8, "auto"])
 def test_grouped_entropy_layouts(spark, buckets):
     """grouped_entropy (the §2.6 UDAF surface) is output-identical
-    across its layouts: one-call-per-key (None), a pinned bucket
-    count, and the batch 'auto' (2x parallelism — r8). Values follow
+    across bucket counts: a pinned count and the batch 'auto' (2x
+    parallelism — r8). Values follow
     the sorted-category ordered sum the oracle pins; a single-category
     key reads exactly 0.0 entropy."""
     import math
@@ -1777,13 +1777,12 @@ def test_grouped_entropy_layouts(spark, buckets):
     assert got == {1: (8, 1.0), 2: (10, h2), 3: (5, 0.0)}
 
 
-@pytest.mark.parametrize("buckets", [None, 8, "auto"])
+@pytest.mark.parametrize("buckets", [8, "auto"])
 def test_grouped_entropy_null_keys(spark, buckets):
-    """NULL keys form their own group in EVERY layout (r9, ADVICE):
-    the bucketed pandas fold previously ran groupby with the default
-    dropna=True and silently dropped the null-key group, breaking the
-    output-identical contract with the per-key layout and the SQL
-    oracle's GROUP BY (which both keep a NULL-key row)."""
+    """NULL keys form their own group at every bucket count (r9,
+    ADVICE): the bucketed pandas fold previously ran groupby with the
+    default dropna=True and silently dropped the null-key group, where
+    the SQL oracle's GROUP BY keeps a NULL-key row."""
     from selium_spark.operators.udaf import grouped_entropy
 
     rows = (
@@ -1800,6 +1799,30 @@ def test_grouped_entropy_null_keys(spark, buckets):
     assert set(got) == {1, None}
     assert got[None] == (4, 1.0)
     assert got[1][0] == 4
+
+
+@pytest.mark.parametrize("bad", [None, 0, -3, "bogus"])
+def test_bucket_count_validated_at_call(spark, bad):
+    """``state_buckets`` / ``buckets`` take only 'auto' or a positive
+    int, and a bad value raises ValueError when the operator is called:
+    a zero count used to reach ``pmod(..., 0)`` and fail only inside
+    the running query (REMAINDER_BY_ZERO under ANSI mode), and None
+    names the removed per-key state layout."""
+    from selium_spark.operators import stateful
+    from selium_spark.operators.udaf import grouped_entropy
+
+    df = spark.createDataFrame(
+        [(1, "a", "2024-01-01 00:00:00", 1)],
+        "user_id long, event_type string, ts string, event_id long",
+    )
+    with pytest.raises(ValueError, match="state_buckets") as e:
+        stateful.streaming_scd2(
+            df, "user_id", "event_type", "ts", "event_id", state_buckets=bad
+        )
+    if bad is None:
+        assert "per-key" in str(e.value)
+    with pytest.raises(ValueError, match="buckets"):
+        grouped_entropy(df, "user_id", "event_type", buckets=bad)
 
 
 def test_asof_join_directions(spark):

@@ -234,20 +234,26 @@ def test_stream_replay_metrics_machinery(spark, tmp_path):
         spark,
         src,
         schema,
-        # pin the per-key layout: this test asserts its O(keys)
-        # state-row property (the 'auto' default buckets instead)
         lambda s: stateful.streaming_scd2(
-            s, "user_id", "event_type", "ts", "event_id", state_buckets=None
+            s, "user_id", "event_type", "ts", "event_id", state_buckets=4
         ),
         "update",
         state_store="rocksdb",
         shuffle_partitions=2,
         max_files=1,
     )
-    n_keys = spark.read.parquet(src).select("user_id").distinct().count()
+    # one state row per hashed bucket that holds a key: O(buckets),
+    # not O(events)
+    n_buckets = (
+        spark.read.parquet(src)
+        .where(F.col("user_id").isNotNull())
+        .select(F.pmod(F.xxhash64("user_id"), F.lit(4)))
+        .distinct()
+        .count()
+    )
     assert m["rows"] == n_rows
     assert m["n_batches"] == 2
-    assert m["state_rows"] == n_keys  # O(keys), not O(events)
+    assert m["state_rows"] == n_buckets
     assert m["rows_per_s"] > 0 and m["wall_s"] > 0
     assert m["trigger_p50_ms"] > 0 and m["trigger_p99_ms"] >= m["trigger_p50_ms"]
     assert m["state_mb"] > 0  # rocksdb memory reported

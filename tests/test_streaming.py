@@ -462,12 +462,11 @@ def test_wasm_guest_over_stream_matches_batch(spark, tmp_path):
 import pytest
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4, "auto"])
+@pytest.mark.parametrize("state_buckets", [4, "auto"])
 def test_streaming_funnel_matches_batch_fold(spark, tmp_path, state_buckets):
     """Replayed event files (event-time ordered) drive the per-user
-    funnel state to the same step counts as the batch operator.
-    Parametrized over state_buckets: the hashed-bucket layout must be
-    output-identical."""
+    funnel state to the same step counts as the batch operator, at a
+    pinned bucket count and at 'auto'."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import stateful, windows
@@ -510,16 +509,13 @@ def test_streaming_funnel_matches_batch_fold(spark, tmp_path, state_buckets):
     assert got == want and len(got) > 0
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_scd2_matches_batch_history(spark, tmp_path, state_buckets):
-    """Two event-time-ordered micro-batches drive the per-key SCD2
+def test_streaming_scd2_matches_batch_history(spark, tmp_path):
+    """Two event-time-ordered micro-batches drive the bucketed SCD2
     state to the same interval set as the batch window fold — including
     runs that OPEN in batch 1 and CLOSE in batch 2 (the cross-batch
     state handoff), null states (the batch ``lag`` edge rule), two rows
     at one ts ordered by tiebreak, a null key and a key touched only by
-    a late row in batch 2 (both dropped and counted). Parametrized over
-    state_buckets: the hashed-bucket state layout must be
-    output-identical."""
+    a late row in batch 2 (both dropped and counted)."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import relational, stateful
@@ -574,7 +570,7 @@ def test_streaming_scd2_matches_batch_history(spark, tmp_path, state_buckets):
         schema,
         lambda s: stateful.streaming_scd2(
             s, "user_id", "event_type", "ts", "event_id",
-            late_counter=acc, state_buckets=state_buckets,
+            late_counter=acc, state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -699,15 +695,14 @@ def test_request_reply_rtt_measured(spark, tmp_path):
         q.stop()
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4, "auto"])
+@pytest.mark.parametrize("state_buckets", [4, "auto"])
 def test_streaming_gapfill_matches_batch_locf(spark, tmp_path, state_buckets):
-    """Two event-time-ordered micro-batches drive the per-key gapfill
+    """Two event-time-ordered micro-batches drive the bucketed gapfill
     state to the same dense grid as the batch fold — including holes
     that SPAN the batch boundary (gap jumped only when the batch-2 obs
     arrives) and a period whose winning obs arrives in a later batch.
-    Parametrized over state_buckets — None (per-key), a pinned bucket
-    count, and 'auto' (the r8 default, resolve_state_buckets): every
-    layout must be output-identical."""
+    Parametrized over state_buckets — a pinned bucket count and 'auto'
+    (the r8 default, resolve_state_buckets)."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import stateful, windows
@@ -855,14 +850,10 @@ def test_streaming_gapfill_interp_reemits_holes_on_winner_change(spark, tmp_path
     snap.unpersist()
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_gapfill_interp_matches_batch_on_corpus(
-    spark, tmp_path, state_buckets
-):
+def test_streaming_gapfill_interp_matches_batch_on_corpus(spark, tmp_path):
     """Two event-time-ordered micro-batches of the real events corpus
     drive the interp twin to exactly the batch gapfill_interp grid —
-    holes spanning the batch boundary included. Parametrized over
-    state_buckets: the hashed-bucket layout must be output-identical."""
+    holes spanning the batch boundary included."""
     from selium_spark.operators import stateful, windows
     from selium_spark.sources.tables import load_table
 
@@ -881,7 +872,7 @@ def test_streaming_gapfill_interp_matches_batch_on_corpus(
         schema,
         lambda s: stateful.streaming_gapfill_interp(
             s, "user_id", "ts", "value", "event_id", grain="day",
-            state_buckets=state_buckets,
+            state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -913,16 +904,12 @@ def test_streaming_gapfill_interp_matches_batch_on_corpus(
     assert any(filled for (_, filled) in want.values())
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_gapfill_quiet_key_emits_holes_via_timeout(
-    spark, tmp_path, state_buckets
-):
+def test_streaming_gapfill_quiet_key_emits_holes_via_timeout(spark, tmp_path):
     """Round-5 verdict #3: with emit_to_watermark=True a key that goes
-    QUIET still gap-fills — the event-time timeout emits filled rows
-    for every complete period up to the watermark, with NO subsequent
-    observation for that key. Parametrized over state_buckets (r7):
-    the bucket-level emulation (data-path fill sweep + earliest-next-
-    period group timer) must fill the identical grid."""
+    QUIET still gap-fills — filled rows for every complete period up
+    to the watermark, with NO subsequent observation for that key, via
+    the bucket-level timer emulation (r7: data-path fill sweep +
+    earliest-next-period group timer)."""
     src = str(tmp_path / "ev")
     # batch 1: key 1 speaks once (day 1); key 2 anchors day 1
     _write_keyed_events(
@@ -948,7 +935,7 @@ def test_streaming_gapfill_quiet_key_emits_holes_via_timeout(
             "event_id",
             grain="day",
             emit_to_watermark=True,
-            state_buckets=state_buckets,
+            state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -1161,15 +1148,13 @@ def test_latest_enrich_state_ttl_evicts_quiet_keys(spark, tmp_path):
     assert got == {10: "100", 11: None}
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_funnel_abandonment_timeout(spark, tmp_path, state_buckets):
+def test_streaming_funnel_abandonment_timeout(spark, tmp_path):
     """abandon_after: an incomplete funnel quiet past the SLA emits a
     timer-based abandoned=true snapshot with NO further event for the
     user; a user who completes within the SLA never abandons; a later
     real advance supersedes the abandonment under the max(struct)
-    collapse. Parametrized over state_buckets: the bucket-level timer
-    emulation (data-path expiry sweep + earliest-pending-deadline
-    group timer) must produce the identical collapsed snapshot."""
+    collapse — all through the bucket-level timer emulation (data-path
+    expiry sweep + earliest-pending-deadline group timer)."""
     src = str(tmp_path / "ev")
     # user 1: signup day 1, then silence      -> abandoned at day 1+SLA
     # user 2: signup day 1, click day 2, purchase day 3 -> completed
@@ -1201,7 +1186,7 @@ def test_streaming_funnel_abandonment_timeout(spark, tmp_path, state_buckets):
             "user_id", "event_type", "ts",
             ["signup", "click", "purchase"],
             abandon_after="5 days",
-            state_buckets=state_buckets,
+            state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -1401,14 +1386,12 @@ def test_streaming_lsh_pairs_chunked_and_star_overflow(spark, tmp_path):
         )
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_cusum_matches_batch_closed_form(spark, tmp_path, state_buckets):
-    """Three event-time-ordered micro-batches drive the per-key CUSUM
+def test_streaming_cusum_matches_batch_closed_form(spark, tmp_path):
+    """Three event-time-ordered micro-batches drive the bucketed CUSUM
     state to the same statistic as the batch closed form — including a
     period whose rows SPAN a batch boundary (the open-period
     re-emission must supersede the partial one) and periods that close
-    silently across batches. Parametrized over state_buckets: the
-    hashed-bucket state layout must be output-identical."""
+    silently across batches."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import stateful, windows
@@ -1437,7 +1420,7 @@ def test_streaming_cusum_matches_batch_closed_form(spark, tmp_path, state_bucket
         schema,
         lambda s: stateful.streaming_cusum(
             s, "user_id", "ts", "value", target=40.0, slack=2.0, threshold=60.0,
-            state_buckets=state_buckets,
+            state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -1465,8 +1448,7 @@ def test_streaming_cusum_matches_batch_closed_form(spark, tmp_path, state_bucket
     assert not all(a for (_, _, a) in want.values())
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_cusum_alarms_only_rescinds(spark, tmp_path, state_buckets):
+def test_streaming_cusum_alarms_only_rescinds(spark, tmp_path):
     """alarms_only fold gating (r9, judge task #3): a provisional
     open-period ALARM that recedes before the period closes must be
     rescinded by a later non-alarm snapshot — both when the period is
@@ -1500,7 +1482,7 @@ def test_streaming_cusum_alarms_only_rescinds(spark, tmp_path, state_buckets):
         spark, src, schema,
         lambda s: stateful.streaming_cusum(
             s, "user_id", "ts", "value",
-            state_buckets=state_buckets, alarms_only=True, **kw,
+            state_buckets=4, alarms_only=True, **kw,
         ),
         output_mode="update", max_files_per_trigger=1, shuffle_partitions=2,
     )
@@ -1582,13 +1564,11 @@ def test_streaming_cusum_late_rows_counted_and_dropped(spark, tmp_path):
     assert ctr.value == 1
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_ewma_matches_batch_fold(spark, tmp_path, state_buckets):
-    """Three micro-batches (cuts INSIDE periods) drive the per-key EWMA
+def test_streaming_ewma_matches_batch_fold(spark, tmp_path):
+    """Three micro-batches (cuts INSIDE periods) drive the bucketed EWMA
     level through the identical IEEE chain as the batch aggregate fold:
     collapsed snapshot == windows.ewma_level bit-for-bit after the
-    shared Spark-side HALF_UP round. Parametrized over state_buckets:
-    the hashed-bucket layout must be output-identical."""
+    shared Spark-side HALF_UP round."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import stateful, windows
@@ -1615,7 +1595,7 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, state_buckets):
         src,
         schema,
         lambda s: stateful.streaming_ewma_level(
-            s, "user_id", "ts", "value", alpha=0.25, state_buckets=state_buckets
+            s, "user_id", "ts", "value", alpha=0.25, state_buckets=4
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -1646,17 +1626,11 @@ def test_streaming_ewma_matches_batch_fold(spark, tmp_path, state_buckets):
     assert got == want and len(got) >= 10
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_fold_null_keys_dropped_and_counted(
-    spark, tmp_path, state_buckets
-):
+def test_streaming_fold_null_keys_dropped_and_counted(spark, tmp_path):
     """Null-key policy (round-7 advice): rows with a NULL key are
-    DROPPED AND COUNTED into late_counter by BOTH state layouts — the
-    per-key layout would otherwise fold a null-key group while the
-    bucketed layout's pandas groupby (default dropna=True) silently
-    discarded it, breaking the output-identical contract between
-    layouts on null-bearing corpora (the dq suite tolerates up to 2%
-    null user_ids)."""
+    DROPPED AND COUNTED into late_counter — the bucketed fold's pandas
+    groupby (default dropna=True) would otherwise discard them
+    silently (the dq suite tolerates up to 2% null user_ids)."""
     from selium_spark import Engine
     from selium_spark.operators import stateful
     from selium_spark.streaming.replay import replay_to_memory
@@ -1681,7 +1655,7 @@ def test_streaming_fold_null_keys_dropped_and_counted(
     )
     schema = spark.read.parquet(src).schema
     eng = Engine(spark)
-    acc = eng.late_counter(f"nullkey_{state_buckets}")
+    acc = eng.late_counter("nullkey")
 
     snap = replay_to_memory(
         spark,
@@ -1689,7 +1663,7 @@ def test_streaming_fold_null_keys_dropped_and_counted(
         schema,
         lambda s: stateful.streaming_gapfill_locf(
             s, "user_id", "ts", "value", "event_id", grain="day",
-            state_buckets=state_buckets, late_counter=acc,
+            state_buckets=4, late_counter=acc,
         ),
         output_mode="update",
         max_files_per_trigger=1,
@@ -1740,13 +1714,13 @@ def test_stream_dq_production_estimators(spark, tmp_path):
     assert got["unique_native:event_id"][1]  # unique key passes
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4, "auto"])
+@pytest.mark.parametrize("state_buckets", [4, "auto"])
 def test_streaming_last_touch_matches_batch(spark, tmp_path, state_buckets):
     """Attribution streaming twin (r11): event-time-ordered replay in
     TWO micro-batches attributes every conversion exactly like the
     batch window pass — cross-batch state carry included (a click in
-    batch 1 attributes a purchase in batch 2). Parametrized over the
-    state layouts."""
+    batch 1 attributes a purchase in batch 2), at a pinned bucket count
+    and at 'auto'."""
     from pyspark.sql import functions as F
 
     from selium_spark.operators import stateful, windows
@@ -1891,14 +1865,12 @@ def test_streaming_last_touch_same_ts_cross_batch_tiebreak(spark, tmp_path):
     assert len(b) == 1 and b[0]["touch_id"] == -1
 
 
-@pytest.mark.parametrize("state_buckets", [None, 4])
-def test_streaming_last_touch_runner_up_fallback(spark, tmp_path, state_buckets):
+def test_streaming_last_touch_runner_up_fallback(spark, tmp_path):
     """r12 advice regression: when the carried MOST-RECENT touch
     shares a later conversion's timestamp with a higher id (it sorts
     after the conversion in the batch (ts, id) order), the carried
     RUNNER-UP touch must attribute — the single-slot r11 state
-    emitted -1 here while the batch twin attributes the older touch.
-    Both state layouts."""
+    emitted -1 here while the batch twin attributes the older touch."""
     from datetime import datetime, timedelta
 
     from selium_spark.operators import stateful, windows
@@ -1930,7 +1902,7 @@ def test_streaming_last_touch_runner_up_fallback(spark, tmp_path, state_buckets)
         lambda s: stateful.streaming_last_touch(
             s, "user_id", "event_type", "ts", "event_id",
             touch_type="click", conv_type="purchase", max_gap_s=3600,
-            state_buckets=state_buckets,
+            state_buckets=4,
         ),
         output_mode="update",
         max_files_per_trigger=1,
