@@ -19,7 +19,7 @@ sys.path.insert(0, "/root/repo")
 import duckdb  # noqa: E402
 
 from selium_spark import get_spark  # noqa: E402
-from selium_spark.catalog import StreamCatalog  # noqa: E402
+from selium_spark.sources.tables import TABLES  # noqa: E402
 from selium_spark.suite import ORACLES, QUERIES  # noqa: E402
 
 
@@ -84,7 +84,7 @@ def main() -> int:
     else:
         spark = get_spark(app_name="check_correctness", cpus=16, shuffle_partitions=16)
     con = duckdb.connect()
-    for t in StreamCatalog.TESTDATA_TABLES:
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     n_pass = n_fail = 0

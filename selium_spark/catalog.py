@@ -34,6 +34,9 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .sources.tables import TABLES
+from .streaming.replay import file_stream
+
 
 class SchemaMismatchError(ValueError):
     """Strict schema-hash inequality at subscribe/publish time.
@@ -155,19 +158,10 @@ class StreamCatalog:
         ``drop`` -> caller should run with `latest` semantics and no
         checkpoint; loss is surfaced by the engine's metrics listener.
         """
-        import os
-
         entry = self.check(uri, expected_hash) if expected_hash else self.get(uri)
-        reader = self.spark.readStream.schema(entry.schema).format(entry.fmt)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        path = entry.path
-        # FileStreamSource requires a directory; single-file endpoints
-        # become parent dir + glob filter
-        if os.path.isfile(path):
-            reader = reader.option("pathGlobFilter", os.path.basename(path))
-            path = os.path.dirname(path)
-        return reader.load(path)
+        return file_stream(
+            self.spark, entry.path, entry.schema, entry.fmt, max_files_per_trigger
+        )
 
     def subscribe_pattern(self, pattern: str) -> DataFrame:
         """Merge of every endpoint matching a glob (W6 union; reference
@@ -222,12 +216,8 @@ class StreamCatalog:
         return RestrictedCatalog(self, allowed)
 
     # -- convenience: register the driver testdata tables ----------------
-    TESTDATA_TABLES = (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split()
-
     def register_testdata(self, sf_dir: str, prefix: str = "sel://testdata") -> None:
-        for name in self.TESTDATA_TABLES:
+        for name in TABLES:
             self.insert(f"{prefix}/{name}", f"{sf_dir}/{name}.parquet")
 
 

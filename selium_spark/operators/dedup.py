@@ -265,7 +265,6 @@ def lsh_candidate_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     max_band_size: int | None = None,
-    cap_mode: str = "group",
     hash_fn: str = "md5",
     sig_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -276,10 +275,9 @@ def lsh_candidate_pairs(
     independent for identical shingle sets and statistically identical
     otherwise (tests pin equal recall on the fixture corpus).
 
-    Plan (``cap_mode="group"``, default): signature (narrow) -> explode
-    to (doc, band_id, band_key) -> groupBy (band_id, band_key) collect
-    the bucket's ids -> emit each bucket's C(m,2) pairs with array
-    combinatorics -> distinct. No self-join at all: the signature
+    Plan: signature (narrow) -> explode to (doc, band_id, band_key) ->
+    groupBy (band_id, band_key) collect the bucket's ids -> emit each
+    bucket's C(m,2) pairs with array combinatorics -> distinct. No self-join at all: the signature
     pipeline is computed exactly ONCE (a self-join would compute it per
     side — its two sides canonicalize as different exchange shapes, so
     ReuseExchange does not collapse them), and the only shuffles are
@@ -297,41 +295,14 @@ def lsh_candidate_pairs(
     handled by exact dedup / star grouping, see
     ``lsh_band_star_edges``). Pass None only when the corpus is known
     de-boilerplated.
-
-    ``cap_mode="blacklist"`` is the EXTREME-skew variant: in group
-    mode an over-cap bucket is still *collected* on one task before
-    being dropped (linear work and memory in the bucket size — fine
-    for realistic boilerplate clusters, a straggler if one band holds
-    a double-digit percentage of a 100 TB corpus). Blacklist mode
-    never co-locates the hot bucket: per-key counts aggregate with
-    map-side combine, the few over-cap keys broadcast, and a map-side
-    anti-join drops their rows BEFORE the bucket shuffle. Costs a
-    persist+count barrier plus the count-aggregation job — use it when
-    the corpus is known to carry mega-buckets.
     """
     exploded = banded_keys(
         df, text_col, id_col, k, bands, shingle_n, hash_fn=hash_fn, sig_df=sig_df
     )
-    if max_band_size is not None and cap_mode == "blacklist":
-        # The band table is tiny (k hashes per doc) next to the corpus;
-        # materialize it once rather than recompute the signature
-        # pipeline for the count-agg job AND the probe side. The
-        # count() pins the cache BEFORE the consumers fan out.
-        exploded = exploded.persist()
-        exploded.count()
-        hot = (
-            exploded.groupBy("band_id", "band_key")
-            .agg(F.count(F.lit(1)).alias("_bsz"))
-            .where(F.col("_bsz") > max_band_size)
-            .select("band_id", "band_key")
-        )
-        exploded = exploded.join(
-            F.broadcast(hot), ["band_id", "band_key"], "left_anti"
-        )
     buckets = exploded.groupBy("band_id", "band_key").agg(
         F.collect_list(id_col).alias("_ids")
     )
-    if max_band_size is not None and cap_mode != "blacklist":
+    if max_band_size is not None:
         buckets = buckets.where(F.size("_ids") <= max_band_size)
     # each unordered pair appears exactly once regardless of array
     # order (x < y picks one orientation from the full cross product);

@@ -835,13 +835,13 @@ def dsir_importance(
     occurrence-count table (one shuffle); the scoring join and final
     per-doc aggregate consume THAT table, so duplicate features never
     reach the join (measured 1.65x at sf0.1 vs joining raw feature
-    occurrences). The per-(doc,bucket) table is PERSISTED and pinned
-    with a count() before its two consumers fan out (the
-    dedup.lsh_candidate_pairs blacklist-mode pattern, dedup.py:304) —
-    the raw corpus's tokenize+hash+shuffle subtree executes exactly
-    ONCE; without the pin, AQE staging keeps ReuseExchange from
-    collapsing the two consumers and the full corpus pass ran twice
-    (at 100 TB, a second full tokenize+hash scan). Distributions
+    occurrences). The per-(doc,bucket) table is PERSISTED before its
+    two consumers fan out, and the denominator's broadcast-build job
+    fills that cache before the scoring join runs, so the raw corpus's
+    tokenize+hash+shuffle subtree executes exactly ONCE; without the
+    persist, AQE staging keeps ReuseExchange from collapsing the two
+    consumers and the full corpus pass ran twice (at 100 TB, a second
+    full tokenize+hash scan). Distributions
     collapse to B rows (constant) and broadcast back.
     The target corpus is typically tiny (a quality sample) but nothing
     requires it. Weights are rounded so JVM/libm ulp differences can't
@@ -897,7 +897,7 @@ def dsir_importance(
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-    # No eager count() barrier needed (unlike the blacklist pattern):
+    # per_db is persisted but needs no eager count() pin to run once:
     # the denominator consumer feeds a BROADCAST exchange, which Spark
     # executes as its own job BEFORE the probe stage can start, so the
     # broadcast-build job populates the cache and the scoring join

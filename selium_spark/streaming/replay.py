@@ -11,11 +11,94 @@ selium's emit-partial-window-on-stream-end behavior, SURVEY §7.4.1).
 
 from __future__ import annotations
 
+import contextlib
+import os
 import tempfile
 import uuid
-from typing import Callable
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+
+from .state import state_store_provider
+
+#: State-store partitions of a replay (``spark.sql.shuffle.partitions``
+#: for the query's life). Streaming state stores pay a per-partition
+#: commit every micro-batch, so the count is sized to state volume, not
+#: to cores: r12's 19.06 s `stream_attr_last_touch` reading came from a
+#: replay inheriting the 32-core bench session's 32 partitions (r13: 8
+#: vs 32 was flat in an isolated A/B, but 8 was consistently fast in
+#: the full bench sweep).
+STATE_PARTITIONS = 8
+
+
+def file_stream(
+    spark: SparkSession,
+    path: str,
+    schema,
+    fmt: str = "parquet",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-stream reader over ``path`` (a directory or one file).
+
+    ``maxFilesPerTrigger`` bounds each micro-batch. FileStreamSource
+    needs a directory, so a single-file source becomes its parent dir
+    plus a glob filter on the file name."""
+    reader = spark.readStream.schema(schema).format(fmt)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return reader.load(path)
+
+
+@contextlib.contextmanager
+def drained_run(
+    spark: SparkSession,
+    out: DataFrame,
+    sink: str,
+    output_mode: str = "append",
+    timeout_s: float = 300.0,
+    shuffle_partitions: int = STATE_PARTITIONS,
+    state_store: str | None = None,
+    query_name: str | None = None,
+) -> Iterator[StreamingQuery]:
+    """Run ``out`` to the ``sink`` format with an ``availableNow``
+    trigger and yield the terminated query.
+
+    ``shuffle_partitions`` is set for the query's start (Spark keeps it
+    in the offset log) and restored on exit. ``state_store`` selects the
+    state-store provider for this query ('rocksdb' for disk-backed
+    bounded-memory state; None keeps the session default). The
+    checkpoint lives in a temp dir removed on exit.
+
+    Raises ``TimeoutError`` (after stopping the query) when it has not
+    drained within ``timeout_s``: a partial run never looks complete.
+    """
+    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    provider_ctx = (
+        state_store_provider(spark, state_store) if state_store else contextlib.nullcontext()
+    )
+    try:
+        with tempfile.TemporaryDirectory(prefix="selium_ckpt_") as ckpt, provider_ctx:
+            writer = out.writeStream.outputMode(output_mode).format(sink)
+            if query_name:
+                writer = writer.queryName(query_name)
+            query = (
+                writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+            )
+            query.awaitTermination(timeout_s)
+            if query.isActive:
+                query.stop()
+                raise TimeoutError(
+                    f"streaming query {query_name or query.id} did not drain "
+                    f"within {timeout_s} s; the query was stopped"
+                )
+            yield query
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 def replay_to_memory(
@@ -26,7 +109,7 @@ def replay_to_memory(
     output_mode: str = "append",
     max_files_per_trigger: int | None = None,
     timeout_s: float = 300.0,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = STATE_PARTITIONS,
     state_store: str | None = None,
     fmt: str = "parquet",
 ) -> DataFrame:
@@ -34,59 +117,26 @@ def replay_to_memory(
     to memory, block until drained, return the sink's contents.
 
     ``shuffle_partitions`` sizes the stateful-operator state-store count
-    for THIS query (the conf is captured at query start, then restored).
-    Streaming state stores cost per-partition commit overhead every
-    micro-batch — size to state volume, not core count: 8 handles test
-    SFs; a 100 TB deployment raises it with its key cardinality.
+    for THIS query. It defaults to ``STATE_PARTITIONS`` (8), never the
+    session's count: a replay that inherits a 32-core session's
+    partitions pays 32 state-store commits per micro-batch.
 
-    ``state_store`` selects the provider for THIS query ('rocksdb' for
-    disk-backed bounded-memory state — the 100 TB configuration; None
-    keeps the session default).
-
-    Raises ``TimeoutError`` (after stopping the query) when the replay
-    has not drained within ``timeout_s``: a partial sink is never
-    returned as if complete.
+    ``state_store`` and the ``TimeoutError`` contract are those of
+    ``drained_run``.
     """
-    import contextlib
-    import os
-
-    from .state import state_store_provider
-
     name = f"replay_{uuid.uuid4().hex[:8]}"
-    reader = spark.readStream.schema(schema).format(fmt)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    # FileStreamSource needs a directory; a single-file source becomes
-    # parent dir + glob filter on the file name
-    if os.path.isfile(source_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(source_path))
-        source_path = os.path.dirname(source_path)
-    stream = reader.load(source_path)
-    out = transform(stream)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    provider_ctx = (
-        state_store_provider(spark, state_store) if state_store else contextlib.nullcontext()
-    )
+    out = transform(file_stream(spark, source_path, schema, fmt, max_files_per_trigger))
     try:
-        with tempfile.TemporaryDirectory(prefix="selium_ckpt_") as ckpt, provider_ctx:
-            query = (
-                out.writeStream.queryName(name)
-                .outputMode(output_mode)
-                .format("memory")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination(timeout_s)
-            if query.isActive:
-                query.stop()
-                spark.catalog.dropTempView(name)
-                raise TimeoutError(
-                    f"replay of {source_path} did not drain within "
-                    f"{timeout_s} s; the query was stopped"
-                )
+        with drained_run(
+            spark,
+            out,
+            "memory",
+            output_mode,
+            timeout_s,
+            shuffle_partitions,
+            state_store,
+            query_name=name,
+        ):
             # materialize before the checkpoint dir disappears —
             # JVM-side (executor-stored blocks, freed by the
             # ContextCleaner once the frame is unreferenced), NOT a
@@ -94,9 +144,6 @@ def replay_to_memory(
             # sink row through Python and back cost ~0.5-0.7 s per
             # graded replay at sf0.1 (r8 profile, BASELINE.md) and
             # pinned the whole output in driver memory
-            sink = spark.table(name).localCheckpoint(eager=True)
-            spark.catalog.dropTempView(name)  # free the memory sink
-            return sink
+            return spark.table(name).localCheckpoint(eager=True)
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        spark.catalog.dropTempView(name)  # free the memory sink

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from .operators import dedup, messaging, multimodal, packing, relational, similarity, text
 from .operators import sketches, transforms, windows
-from .sources.tables import load_table
+from .sources.tables import ensure_nanos_as_long, load_table, norm_stream_ts, ts_from_nanos
+from .streaming.replay import replay_to_memory
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB side)
@@ -75,22 +76,17 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _norm_stream_ts(ev: DataFrame, schema, col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to TIMESTAMP (LTZ) inside a
-    streaming transform. The testdata ships ts as either
-    TIMESTAMP(NANOS) (read as long under nanosAsLong) or plain
-    timestamp[us] with isAdjustedToUTC=false (read as TIMESTAMP_NTZ) —
-    and watermark-backed operators (dropDuplicatesWithinWatermark,
-    stream-stream joins) hard-require LTZ. Session tz is UTC, so the
-    NTZ->LTZ cast is instant-preserving."""
-    from pyspark.sql import types as T
-
-    dt = schema[col].dataType
-    if isinstance(dt, T.LongType):
-        return ev.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
-    if isinstance(dt, T.TimestampNTZType):
-        return ev.withColumn(col, F.col(col).cast("timestamp"))
-    return ev
+def _replay_events(
+    spark: SparkSession,
+    sf_dir: str,
+    transform: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay ``events.parquet`` as a file stream through ``transform``
+    (streaming.replay.replay_to_memory) and return the drained sink."""
+    ensure_nanos_as_long(spark)
+    path = f"{sf_dir}/events.parquet"
+    return replay_to_memory(spark, path, spark.read.parquet(path).schema, transform, output_mode)
 
 
 # ---------------------------------------------------------------------------
@@ -1991,18 +1987,9 @@ SELECT media_id, frame_idx FROM (
 def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 streaming twin: events replayed as a file stream through the
     same tumbling aggregation into a memory sink (SURVEY §5.3)."""
-    from .streaming.replay import replay_to_memory
-    from pyspark.sql import types as T
-
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = stream
-        if isinstance(schema["ts"].dataType, T.LongType):
-            ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        ev = ts_from_nanos(stream)
         agg = windows.tumbling(ev, "ts", "1 day", keys=["event_type"]).agg(
             F.count(F.lit(1)).alias("n"),
             relational.dec_sum("value", "sum_value"),
@@ -2011,26 +1998,14 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "event_type", "n", "sum_value"
         )
 
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform, output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 def stream_threshold_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 streaming twin (log-analyser alert pipeline end-to-end)."""
-    from .streaming.replay import replay_to_memory
-    from pyspark.sql import types as T
-
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = stream
-        if isinstance(schema["ts"].dataType, T.LongType):
-            ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        ev = ts_from_nanos(stream)
         alerts = windows.window_threshold_alerts(
             ev,
             "ts",
@@ -2045,26 +2020,16 @@ def stream_threshold_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("window_start"), "errors", "signups"
         )
 
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform, output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup with bounded state: the events table
     duplicated (two 'writers') then deduplicated by key within the
     watermark horizon."""
-    from .streaming.replay import replay_to_memory
-    from pyspark.sql import types as T
-
-    from .sources.tables import ensure_nanos_as_long
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         doubled = ev.unionByName(ev)  # two writers publishing the same frames
         from .operators.stateful import dedup_within_watermark
 
@@ -2072,9 +2037,7 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "event_type"
         )
 
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform, shuffle_partitions=8
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_DEDUP = "SELECT event_id, event_type FROM events"
@@ -2096,7 +2059,6 @@ def stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical pair set."""
     from .operators.dedup import banded_keys
     from .operators.stateful import streaming_lsh_pairs as _op
-    from .streaming.replay import replay_to_memory
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
 
@@ -2111,7 +2073,6 @@ def stream_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema,
         transform,
         output_mode="append",
-        shuffle_partitions=8,
     )
     return snap.distinct()
 
@@ -2343,7 +2304,6 @@ def stream_latest_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from .operators.stateful import latest_enrich_stream, tag_union
-    from .streaming.replay import replay_to_memory
 
     ev = _t(spark, sf_dir, "events")
     work = ev.where(F.col("event_type") != "signup").select("event_id", "user_id", "ts")
@@ -2351,9 +2311,6 @@ def stream_latest_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", F.col("value").alias("signup_value")
     )
     tagged = tag_union(work, config, "ts", ["user_id"])
-    tmp = tempfile.mkdtemp(prefix="selium_tagged_")
-    tagged.write.mode("overwrite").parquet(tmp)
-    schema = spark.read.parquet(tmp).schema
 
     def transform(stream: DataFrame) -> DataFrame:
         return latest_enrich_stream(
@@ -2365,7 +2322,11 @@ def stream_latest_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             output_schema="event_id long, signup_value_asof string",
         )
 
-    return replay_to_memory(spark, tmp, schema, transform, shuffle_partitions=8)
+    # the replay returns a materialized (localCheckpoint) sink, so the
+    # source dir can go before this returns
+    with tempfile.TemporaryDirectory(prefix="selium_tagged_") as tmp:
+        tagged.write.mode("overwrite").parquet(tmp)
+        return replay_to_memory(spark, tmp, spark.read.parquet(tmp).schema, transform)
 
 
 def s10_lcg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2968,14 +2929,9 @@ def stream_join_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user click/purchase events joined within the replay horizon.
     With availableNow over a bounded replay the result equals the batch
     join, which is the oracle."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         clicks = (
             ev.where(F.col("event_type") == "click")
             .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts"))
@@ -2994,9 +2950,7 @@ def stream_join_clicks_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return joined.select(clicks.user_id, "click_id", "purchase_id")
 
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform, shuffle_partitions=8
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_JOIN = """
@@ -3146,8 +3100,6 @@ def stream_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a full value oracle. The streamed shape of the reference's
     per-record guest compute over a subscription
     (system/userland/src/io.rs:288 chunked stream reads)."""
-    from .streaming.replay import replay_to_memory
-
     emb = _t(spark, sf_dir, "embeddings")
     cb_rows = similarity.pq_codebook(emb, m_subs=8, k_codes=16).collect()
     schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
@@ -3355,8 +3307,6 @@ def stream_ivfpq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle. Live index ingest: new vectors stream into the
     partitionBy(cluster_id) layout while queries probe the
     already-written lists."""
-    from .streaming.replay import replay_to_memory
-
     emb = _t(spark, sf_dir, "embeddings")
     cents = similarity.make_centroids(emb, n=8)
     cent_rows = cents.collect()
@@ -3578,31 +3528,15 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows in Structured Streaming (30-minute gap per
     user), replayed to completion — oracle is the same lag/cumsum
     sessionization identity as the batch twin w1c."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = stream
-        from pyspark.sql import types as T
-
-        if isinstance(schema["ts"].dataType, T.LongType):
-            ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        ev = ts_from_nanos(stream)
         agg = windows.session(ev, "ts", "30 minutes", keys=["user_id"]).agg(
             F.count(F.lit(1)).alias("n")
         )
         return agg.select("user_id", F.col("window.start").alias("session_start"), "n")
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4798,25 +4732,13 @@ def stream_cms_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     running heavy-hitter table over an unbounded stream. Replayed
     events land on the identical counters as the batch plan (DuckDB
     oracle-matched)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         return sketches.cms_table(stream, "user_id", w=256).select(
             F.col("row").alias("cms_row"), "pos", "cnt"
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 SQL_STREAM_CMS = f"""
@@ -4840,26 +4762,13 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-on-read."""
     from pyspark.sql import Window
 
-    from .sources.tables import ensure_nanos_as_long, load_table
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         return sketches.cms_table(
             ev.withColumn("day", F.date_trunc("day", "ts")), "user_id", w=256, by=("day",)
         ).select("day", F.col("row").alias("cms_row"), "pos", "cnt")
 
-    emitted = replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    emitted = _replay_events(spark, sf_dir, transform, "complete")
     counters = emitted.select("day", F.col("cms_row").alias("row"), "pos", "cnt")
     keys = (
         load_table(spark, sf_dir, "events")
@@ -5144,23 +5053,15 @@ def stream_gapfill_locf_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming weekly gapfill twin (round 6): grain='week' replays to
     the same Monday-anchored grid as the batch weekly fold — the grain
     parity the batch/streaming twins promise (round-5 verdict #4)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_gapfill_locf as op
 
         return op(ev, "user_id", "ts", "value", "event_id", grain="week",
                   state_buckets=256)
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -5186,23 +5087,15 @@ def stream_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle). Re-emissions of a period (a later obs in the same period
     arriving in a later batch) are collapsed by max_by on the winning
     observation's (ts, tiebreak)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
+        ev = norm_stream_ts(stream).where(F.col("user_id") < 50)
         from .operators.stateful import streaming_gapfill_locf as op
 
         return op(ev, "user_id", "ts", "value", "event_id", grain="day",
                   state_buckets=256)
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -5259,23 +5152,15 @@ def stream_gapfill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     here by the family's max_by on the winning (src_ts_us, src_tb).
     The snapshot must equal the batch gapfill_interp fold (DuckDB
     oracle; same four-op IEEE interpolation chain, no rounding)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
+        ev = norm_stream_ts(stream).where(F.col("user_id") < 50)
         from .operators.stateful import streaming_gapfill_interp as op
 
         return op(ev, "user_id", "ts", "value", "event_id", grain="day",
                   state_buckets=256)
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -5350,14 +5235,9 @@ def stream_gapfill_watermark_fill(spark: SparkSession, sf_dir: str) -> DataFrame
     extends every key's grid to GREATEST(its own last obs period, the
     global watermark period - 1) — the rows beyond a key's last
     observation exist ONLY because the timeout emitted them."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).where(F.col("user_id") < 50)
+        ev = norm_stream_ts(stream).where(F.col("user_id") < 50)
         from .operators.stateful import streaming_gapfill_locf as op
 
         return op(
@@ -5371,10 +5251,7 @@ def stream_gapfill_watermark_fill(spark: SparkSession, sf_dir: str) -> DataFrame
             state_buckets=256,
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -5586,14 +5463,9 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_scd2_user_state fold (same DuckDB oracle). Runs the r7-adopted
     hashed-bucket state layout pinned at state_buckets=256 (BASELINE.md
     A/B)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_scd2
 
         return streaming_scd2(
@@ -5601,10 +5473,7 @@ def stream_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_buckets=256,
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     # Collapse re-emissions: each run is keyed (user, state, valid_from);
     # a closed emission carries a real valid_to (< the open-interval
     # sentinel), so min() keeps it over any stale open emission.
@@ -5623,25 +5492,17 @@ def stream_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     (step, last_ts) state driven by the replayed events stream, then
     the completion distribution — must equal the batch fold's answer
     (DuckDB oracle)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     steps = ["signup", "click", "purchase"]
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_funnel
 
         return streaming_funnel(
             ev, "user_id", "event_type", "ts", steps, state_buckets=256
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     per_user = snap.groupBy("user").agg(F.max("step_reached").alias("step_reached"))
     return (
         per_user.groupBy("step_reached")
@@ -5691,15 +5552,10 @@ def stream_funnel_abandoned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id % 37 == 0) complete the funnel — the synthetic events
     give every user every type, so without the thinning no user could
     ever stall and the timeout path would be vacuously green."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     steps = ["signup", "click", "purchase"]
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).where(
+        ev = norm_stream_ts(stream).where(
             (F.col("user_id") < 100)
             & ((F.col("event_type") != "purchase") | (F.col("event_id") % 37 == 0))
         )
@@ -5715,10 +5571,7 @@ def stream_funnel_abandoned(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_buckets=256,
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     per_user = snap.groupBy("user").agg(
         F.max(F.struct("step_reached", "abandoned")).alias("w")
     )
@@ -5777,11 +5630,6 @@ def stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     |keys| x 3 numbers, and the snapshot equals the batch answer
     (DuckDB oracle). This is the streaming side of
     windows.zscore_outliers' stats stage."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         dv = F.col("value").cast("decimal(18,2)")
@@ -5791,10 +5639,7 @@ def stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(dv * dv).cast("double").alias("ss"),
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="complete", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "complete")
     return snap.select(
         "event_type",
         "n",
@@ -5825,23 +5670,11 @@ def stream_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs of state total — a running distinct-users estimate over an
     unbounded stream. Replayed events must land on the identical
     registers as the batch plan (and they oracle-match DuckDB)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         return sketches.hll_register_updates(stream, "user_id")
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 SQL_STREAM_HLL = """
@@ -6515,14 +6348,9 @@ def stream_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_cusum_alarms). Open-period re-emissions collapse by max_by on
     the rows-folded marker. Runs the r7-adopted hashed-bucket state
     layout pinned at state_buckets=256 (BASELINE.md A/B)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_cusum as op
 
         return op(
@@ -6531,10 +6359,7 @@ def stream_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_buckets=256,
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -6586,14 +6411,9 @@ def stream_cusum_alarms_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshots (the only superseding classes), so the max_by(src_n)
     collapse still rescinds stale provisional alarms and the final
     ``WHERE alarm`` equals the batch alarms_only output exactly."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_cusum as op
 
         return op(
@@ -6602,10 +6422,7 @@ def stream_cusum_alarms_only(spark: SparkSession, sf_dir: str) -> DataFrame:
             state_buckets=256, alarms_only=True,
         )
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key", "period")
         .agg(
@@ -6631,22 +6448,14 @@ def stream_ewma_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle); the HALF_UP round happens Spark-side on the raw double.
     Runs the r7-adopted hashed-bucket state layout pinned at
     state_buckets=256 (BASELINE.md A/B)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         from .operators.stateful import streaming_ewma_level as op
 
         return op(ev, "user_id", "ts", "value", alpha=0.25, state_buckets=256)
 
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update", shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return (
         snap.groupBy("key")
         .agg(
@@ -7037,8 +6846,6 @@ def stream_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied to the ingest stream). Pure per-row literal-rule map — no
     state store, APPEND-legal, emission equals the batch tokenize
     (full value oracle), the text sibling of stream_ivfpq_encode."""
-    from .streaming.replay import replay_to_memory
-
     docs = _t(spark, sf_dir, "documents")
     merges = text.bpe_train_merges(docs, num_merges=_BPE_K)
     rules = [(r["lft"], r["rgt"]) for r in merges.collect()]
@@ -7256,33 +7063,18 @@ def stream_attr_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader collapse. Equals the batch window pass under event-time-
     ordered replay, so this streaming query carries the batch
     oracle verbatim."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_last_touch as op
 
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         return op(
             ev, "user_id", "event_type", "ts", "event_id",
             touch_type="click", conv_type="purchase", max_gap_s=3600,
             state_buckets=256,
         )
 
-    # shuffle_partitions=8 pins the state-store partition count to the
-    # data size like every sibling twin (r13, verdict task #3: without
-    # the pin this replay inherited the SESSION's count — 32 in the
-    # bench session — and the 32-partition x sweep-aged-session
-    # interaction produced the r12 19.06 s reading; isolated ABAB shows
-    # 8 vs 32 flat, full-sweep context shows 8 consistently fast)
-    snap = replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update",
-        shuffle_partitions=8,
-    )
+    snap = _replay_events(spark, sf_dir, transform, "update")
     return snap.na.fill({"touch_id": -1, "gap_s": -1})
 
 
@@ -7294,14 +7086,9 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     evict click state past click.ts + 1h — bounded state at 100 TB).
     Inner append-mode matches emit as they arrive; the oracle is the
     identical batch interval join."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
+        ev = norm_stream_ts(stream).withWatermark("ts", "0 seconds")
         c = ev.where(F.col("event_type") == "click").select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -7327,14 +7114,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="append",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_INTERVAL_JOIN = """
@@ -7490,11 +7270,7 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the identical batch metrics (and HLL register math) over
     the whole corpus."""
     from .operators import expectations as X
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
 
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     rules = [
         X.expect_not_null("user_id"),
         X.expect_between("value", 0.0, 200.0, max_frac=0.5),
@@ -7507,16 +7283,9 @@ def stream_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
 
     def transform(stream: DataFrame) -> DataFrame:
-        return X.validate_expectations(_norm_stream_ts(stream, schema), rules)
+        return X.validate_expectations(norm_stream_ts(stream), rules)
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 _SQL_HLL_DUP_FRAC = """
@@ -7604,17 +7373,12 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates revenue per market segment in complete mode. At 100 TB
     the dim is a broadcast or a bucketed static table; stream state
     is only the |segments|-row aggregate."""
-    from .sources.tables import ensure_nanos_as_long, load_table
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         joined = ev.join(
             F.broadcast(cust), ev.user_id == cust.c_custkey
         )
@@ -7625,14 +7389,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_value"),
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 SQL_STREAM_STATIC_ENRICH = """
@@ -7654,14 +7411,9 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     unmatched rows only where click.ts + 1h < max(event ts). NULL
     purchase becomes a -1 sentinel (nullable-BIGINT canonicalization,
     same device as attr_last_touch)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
+        ev = norm_stream_ts(stream).withWatermark("ts", "0 seconds")
         c = ev.where(F.col("event_type") == "click").select(
             F.col("user_id").alias("c_user"),
             F.col("event_id").alias("click_id"),
@@ -7685,14 +7437,7 @@ def stream_left_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("purchase_id"), F.lit(-1)).alias("purchase_id"),
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="append",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_LEFT_INTERVAL = """
@@ -7789,28 +7534,17 @@ def stream_attr_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key, not O(history)). Equals the batch window pass under
     event-time-ordered replay, so it carries the batch oracle
     verbatim."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_multi_touch as op
 
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         return op(
             ev, "user_id", "event_type", "ts", "event_id",
             touch_type="click", conv_type="purchase", max_gap_s=3600,
         )
 
-    # shuffle_partitions=8: state partitions sized to data, not the
-    # session's core count (see stream_attr_last_touch)
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "update")
 
 
 SQL_ATTR_MULTI_TOUCH = """
@@ -7849,29 +7583,18 @@ def stream_attr_position_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.2 (candidates lexsorted on (ts, id) so carried-state and
     batch-local touches interleave in the batch's sort order). Batch
     oracle verbatim."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
         from .operators.stateful import streaming_multi_touch as op
 
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         return op(
             ev, "user_id", "event_type", "ts", "event_id",
             touch_type="click", conv_type="purchase", max_gap_s=3600,
             weighting="position",
         )
 
-    # shuffle_partitions=8: state partitions sized to data, not the
-    # session's core count (see stream_attr_last_touch)
-    return replay_to_memory(
-        spark, f"{sf_dir}/events.parquet", schema, transform,
-        output_mode="update",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "update")
 
 
 def attr_position_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8017,14 +7740,9 @@ def stream_weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and converge to the batch rollup. Windows anchor to the epoch
     (1970-01-01, a Thursday), so the oracle buckets by the same
     7-day epoch arithmetic rather than ISO date_trunc('week')."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema)
+        ev = norm_stream_ts(stream)
         first = F.min(F.struct("ts", "event_id", "value"))
         last = F.max(F.struct("ts", "event_id", "value"))
         return (
@@ -8049,14 +7767,7 @@ def stream_weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="complete",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform, "complete")
 
 
 SQL_STREAM_WEEKLY_OHLC = """
@@ -8086,14 +7797,9 @@ def stream_weekly_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial week stays open — pending, not missing — and the oracle
     mirrors that boundary (the stream_left_interval_join eviction
     device applied to windowed aggregation)."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
+        ev = norm_stream_ts(stream).withWatermark("ts", "0 seconds")
         first = F.min(F.struct("ts", "event_id", "value"))
         last = F.max(F.struct("ts", "event_id", "value"))
         return (
@@ -8118,14 +7824,7 @@ def stream_weekly_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="append",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_WEEKLY_OHLC_CLOSED = """
@@ -8152,14 +7851,9 @@ def stream_daily_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark-closed bars emitted exactly once, state O(open days);
     the final partial day stays open (pending, not missing) and the
     oracle mirrors that boundary."""
-    from .sources.tables import ensure_nanos_as_long
-    from .streaming.replay import replay_to_memory
-
-    ensure_nanos_as_long(spark)
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
     def transform(stream: DataFrame) -> DataFrame:
-        ev = _norm_stream_ts(stream, schema).withWatermark("ts", "0 seconds")
+        ev = norm_stream_ts(stream).withWatermark("ts", "0 seconds")
         first = F.min(F.struct("ts", "event_id", "value"))
         last = F.max(F.struct("ts", "event_id", "value"))
         return (
@@ -8184,14 +7878,7 @@ def stream_daily_ohlc_closed(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return replay_to_memory(
-        spark,
-        f"{sf_dir}/events.parquet",
-        schema,
-        transform,
-        output_mode="append",
-        shuffle_partitions=8,
-    )
+    return _replay_events(spark, sf_dir, transform)
 
 
 SQL_STREAM_DAILY_OHLC_CLOSED = """

@@ -5,6 +5,7 @@ import os
 import pytest
 
 from selium_spark import StreamCatalog, get_spark
+from selium_spark.sources.tables import TABLES
 
 SF_DIR = os.environ.get("SELIUM_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE_DIR = os.environ.get("SELIUM_ORACLE_SF_DIR", "/root/testdata/sf0.01")
@@ -134,7 +135,7 @@ def duck():
     import duckdb
 
     con = duckdb.connect()
-    for name in StreamCatalog.TESTDATA_TABLES:
+    for name in TABLES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
         )

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import types as T
 
 from selium_spark import SchemaMismatchError, schema_hash
-from selium_spark.catalog import StreamCatalog
+from selium_spark.sources.tables import TABLES
 
 
 def test_register_and_read(spark, catalog):
@@ -31,7 +31,7 @@ def test_strict_hash_gate(spark, catalog):
 
 def test_glob_lookup(spark, catalog):
     matches = catalog.lookup("sel://testdata/*")
-    assert len(matches) == len(StreamCatalog.TESTDATA_TABLES)
+    assert len(matches) == len(TABLES)
     assert catalog.lookup("sel://testdata/nation")[0].uri == "sel://testdata/nation"
 
 

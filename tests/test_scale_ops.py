@@ -259,6 +259,30 @@ def test_stream_replay_metrics_machinery(spark, tmp_path):
     assert m["state_mb"] > 0  # rocksdb memory reported
 
 
+def test_stream_replay_metrics_raises_when_not_drained(spark, tmp_path):
+    """A stress replay that outlives ``timeout_s`` is stopped and
+    raises TimeoutError; it never reports rows/wall_s/state_rows as if
+    the replay had drained."""
+    import os
+    import sys
+
+    import pytest
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from scripts.scale_stress import stream_replay_metrics
+
+    src = str(tmp_path / "src")
+    for i in range(3):
+        spark.range(i * 10, (i + 1) * 10).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        stream_replay_metrics(
+            spark, src, schema, lambda s: s, "append", None, max_files=1, timeout_s=0.01
+        )
+    assert {q.id for q in spark.streams.active} == before
+
+
 def test_stream_ops_streaming_session_runs(spark, tmp_path):
     """The native-session_window entry in the --streaming stress set
     replays end-to-end (append mode, rocksdb): sessions merge in JVM
@@ -282,7 +306,7 @@ def test_stream_ops_streaming_session_runs(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     n_rows = spark.read.parquet(src).count()
 
-    from selium_spark.suite import _norm_stream_ts
+    from selium_spark.sources.tables import norm_stream_ts
 
     mode, factory = _stream_ops()["streaming_session"]
     assert mode == "append"
@@ -290,7 +314,7 @@ def test_stream_ops_streaming_session_runs(spark, tmp_path):
         spark,
         src,
         schema,
-        lambda s: factory(_norm_stream_ts(s, schema)),
+        lambda s: factory(norm_stream_ts(s)),
         mode,
         state_store="rocksdb",
         shuffle_partitions=2,
@@ -314,8 +338,7 @@ def test_stream_ops_interval_join_runs(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from scripts.scale_stress import _stream_ops, stream_replay_metrics
-    from selium_spark.sources.tables import load_table
-    from selium_spark.suite import _norm_stream_ts
+    from selium_spark.sources.tables import load_table, norm_stream_ts
 
     ev = load_table(spark, "/root/testdata/sf0.001", "events").where(
         F.col("user_id") < 40
@@ -332,7 +355,7 @@ def test_stream_ops_interval_join_runs(spark, tmp_path):
         spark,
         src,
         schema,
-        lambda s: factory(_norm_stream_ts(s, schema)),
+        lambda s: factory(norm_stream_ts(s)),
         mode,
         state_store="rocksdb",
         shuffle_partitions=2,

@@ -2197,3 +2197,22 @@ def test_replay_to_memory_raises_when_not_drained(spark, tmp_path):
             timeout_s=0.01,
         )
     assert {q.id for q in spark.streams.active} == before
+
+
+def test_stream_latest_enrich_leaves_no_tagged_dir(spark):
+    """The tagged source the replay reads is removed before the query
+    returns: the sink is materialized, so no ``selium_tagged_*`` dir
+    is left behind per call."""
+    import glob
+    import os
+    import tempfile
+
+    from conftest import SF_DIR
+
+    from selium_spark.suite import stream_latest_enrich
+
+    pattern = os.path.join(tempfile.gettempdir(), "selium_tagged_*")
+    before = set(glob.glob(pattern))
+    out = stream_latest_enrich(spark, SF_DIR)
+    assert out.count() > 0
+    assert set(glob.glob(pattern)) <= before
