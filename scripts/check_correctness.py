@@ -10,11 +10,12 @@ Usage: python scripts/check_correctness.py [name ...] [--sf DIR]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 

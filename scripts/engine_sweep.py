@@ -21,10 +21,12 @@ from __future__ import annotations
 
 import contextlib
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from selium_spark import get_spark  # noqa: E402
 from selium_spark.suite import QUERIES  # noqa: E402
@@ -81,7 +83,7 @@ def _fresh_retime(sf_dir: str, names: list[str]) -> dict[str, float]:
 
     code = f"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from selium_spark import get_spark
 from selium_spark.suite import QUERIES
 spark = get_spark(app_name="sweep_retime", cpus=32, shuffle_partitions=32)

@@ -34,7 +34,7 @@ deployment actually has; shifting ts per copy would make the global
 watermark fill every early copy's keys across the whole shifted span,
 a semantic blowup no real corpus exhibits.
 
-Writes the scaled datasets under /root/repo/tmp/ (gitignored).
+Writes the scaled datasets under tmp/ at the repository root (gitignored).
 """
 
 from __future__ import annotations
@@ -45,12 +45,15 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TMP = os.path.join(ROOT, "tmp")
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from selium_spark import get_spark  # noqa: E402
 from selium_spark.sources.tables import load_table  # noqa: E402
+from selium_spark.streaming import state_partitions  # noqa: E402
 from selium_spark.streaming.replay import drained_run, file_stream  # noqa: E402
 from selium_spark.suite import QUERIES  # noqa: E402
 
@@ -229,12 +232,12 @@ def ann_main(n: int, skew: bool = False) -> None:
     skew ratio is the evidence that the compressed-codes ADC probe
     absorbs a hot list that a raw-vector probe pays full width for."""
     spark = get_spark(app_name="ann_scale", cpus=32, shuffle_partitions=64)
-    out_dir = f"/root/repo/tmp/emb_x{n}"
+    out_dir = f"{TMP}/emb_x{n}"
     if not os.path.exists(f"{out_dir}/embeddings.parquet"):
         print(f"building {n}x embedding corpus at {out_dir} ...", file=sys.stderr)
         build_ann_corpus(spark, n, out_dir)
     if skew:
-        hot_dir = f"/root/repo/tmp/emb_hot_x{n}"
+        hot_dir = f"{TMP}/emb_hot_x{n}"
         if not os.path.exists(f"{hot_dir}/embeddings.parquet"):
             print(f"building {n}x hot-list corpus at {hot_dir} ...", file=sys.stderr)
             build_ann_corpus(spark, n, hot_dir, hot_frac=0.3)
@@ -483,8 +486,8 @@ def production_main(n: int, skew_mode: bool) -> None:
     spark = get_spark(app_name="prod_stress", cpus=32, shuffle_partitions=64)
     if skew_mode:
         n_docs = n * 50_000
-        uni_dir = f"/root/repo/tmp/docs_uniform_{n_docs}"
-        skew_dir = f"/root/repo/tmp/docs_skewed_{n_docs}"
+        uni_dir = f"{TMP}/docs_uniform_{n_docs}"
+        skew_dir = f"{TMP}/docs_skewed_{n_docs}"
         for d, frac in ((uni_dir, 0.0), (skew_dir, 0.3)):
             if not os.path.exists(f"{d}/documents.parquet"):
                 print(f"building {n_docs}-doc corpus (hot_frac={frac}) at {d} ...",
@@ -503,7 +506,7 @@ def production_main(n: int, skew_mode: bool) -> None:
         print(json.dumps({"n_docs": n_docs, "mode": "production_skew",
                           "hot_frac": 0.3, "queries": report}, indent=2))
         return
-    out_dir = f"/root/repo/tmp/scaled_x{n}"
+    out_dir = f"{TMP}/scaled_x{n}"
     if not os.path.exists(f"{out_dir}/lineitem.parquet"):
         print(f"building {n}x dataset at {out_dir} ...", file=sys.stderr)
         build_scaled(spark, n, out_dir)
@@ -759,15 +762,18 @@ def stream_replay_metrics(
     transform,
     output_mode: str,
     state_store: str | None,
-    shuffle_partitions: int = 32,
+    shuffle_partitions: int | None = None,
     max_files: int = STREAM_FILES_PER_SLICE,
     timeout_s: float = 1800.0,
 ) -> dict:
     """Replay ``src`` through ``transform`` in maxFilesPerTrigger
     micro-batches to a noop sink, returning throughput + state-store
-    metrics from the query's progress events. Raises ``TimeoutError``
-    when the replay has not drained within ``timeout_s``."""
+    metrics from the query's progress events. ``shuffle_partitions=None``
+    derives the state-partition count (``state_partitions``); an int
+    pins it. Raises ``TimeoutError`` when the replay has not drained
+    within ``timeout_s``."""
     out = transform(file_stream(spark, src, schema, "parquet", max_files))
+    shuffle_partitions = shuffle_partitions or state_partitions(out)
     t0 = time.time()
     with drained_run(
         spark, out, "noop", output_mode, timeout_s, shuffle_partitions, state_store
@@ -795,6 +801,7 @@ def stream_replay_metrics(
         return trig[min(int(q * len(trig)), len(trig) - 1)] if trig else 0
 
     return {
+        "partitions": shuffle_partitions,
         "rows": rows,
         "out_rows": out_rows,
         "wall_s": round(wall, 2),
@@ -848,12 +855,12 @@ def lsh_main(n_docs: int = 100_000) -> None:
     from selium_spark.operators import stateful
 
     spark = get_spark(app_name="lsh_stress", cpus=32, shuffle_partitions=32)
-    uni = build_banded(spark, n_docs, 0.0, f"/root/repo/tmp/lsh_uni_{n_docs}") \
-        if not os.path.exists(f"/root/repo/tmp/lsh_uni_{n_docs}/banded.parquet") \
-        else f"/root/repo/tmp/lsh_uni_{n_docs}/banded.parquet"
-    hot = build_banded(spark, n_docs, 0.3, f"/root/repo/tmp/lsh_hot_{n_docs}") \
-        if not os.path.exists(f"/root/repo/tmp/lsh_hot_{n_docs}/banded.parquet") \
-        else f"/root/repo/tmp/lsh_hot_{n_docs}/banded.parquet"
+    uni = build_banded(spark, n_docs, 0.0, f"{TMP}/lsh_uni_{n_docs}") \
+        if not os.path.exists(f"{TMP}/lsh_uni_{n_docs}/banded.parquet") \
+        else f"{TMP}/lsh_uni_{n_docs}/banded.parquet"
+    hot = build_banded(spark, n_docs, 0.3, f"{TMP}/lsh_hot_{n_docs}") \
+        if not os.path.exists(f"{TMP}/lsh_hot_{n_docs}/banded.parquet") \
+        else f"{TMP}/lsh_hot_{n_docs}/banded.parquet"
     schema = spark.read.parquet(uni).schema
     report = {}
     runs = [
@@ -893,7 +900,7 @@ def latency_main(n: int = 10) -> None:
     from selium_spark.sources.tables import ensure_nanos_as_long, norm_stream_ts
 
     ensure_nanos_as_long(spark)
-    src_dir = f"/root/repo/tmp/stream_x{n}"
+    src_dir = f"{TMP}/stream_x{n}"
     dest = f"{src_dir}/events.parquet"
     if not os.path.exists(dest):
         print(f"building {n}x streaming corpus at {src_dir} ...", file=sys.stderr)
@@ -926,7 +933,7 @@ def streaming_main(scales: list[int]) -> None:
     ensure_nanos_as_long(spark)
     report: dict = {}
     for n in scales:
-        src_dir = f"/root/repo/tmp/stream_x{n}"
+        src_dir = f"{TMP}/stream_x{n}"
         dest = f"{src_dir}/events.parquet"
         if not os.path.exists(dest):
             print(f"building {n}x streaming corpus at {src_dir} ...", file=sys.stderr)
@@ -1033,8 +1040,8 @@ def main() -> None:
         n = int(args[0]) if args else 10
         n_rows = n * 50_000
         spark = get_spark(app_name="event_skew", cpus=32, shuffle_partitions=64)
-        uni_dir = f"/root/repo/tmp/events_uniform_{n_rows}"
-        skew_dir = f"/root/repo/tmp/events_whale_{n_rows}"
+        uni_dir = f"{TMP}/events_uniform_{n_rows}"
+        skew_dir = f"{TMP}/events_whale_{n_rows}"
         for d, frac in ((uni_dir, 0.0), (skew_dir, 0.3)):
             if not os.path.exists(f"{d}/events.parquet"):
                 print(f"building {n_rows}-event corpus (hot_frac={frac}) at {d} ...",
@@ -1062,15 +1069,15 @@ def main() -> None:
         return
     skew_mode = "--skew" in sys.argv
     n = int(args[0]) if args else 10
-    out_dir = f"/root/repo/tmp/scaled_x{n}"
+    out_dir = f"{TMP}/scaled_x{n}"
     spark = get_spark(app_name="scale_stress", cpus=32, shuffle_partitions=64)
     if not skew_mode and not os.path.exists(f"{out_dir}/lineitem.parquet"):
         print(f"building {n}x dataset at {out_dir} ...", file=sys.stderr)
         build_scaled(spark, n, out_dir)
     if skew_mode:
         n_docs = n * 50_000  # N=10 -> 500k unique docs
-        uni_dir = f"/root/repo/tmp/docs_uniform_{n_docs}"
-        skew_dir = f"/root/repo/tmp/docs_skewed_{n_docs}"
+        uni_dir = f"{TMP}/docs_uniform_{n_docs}"
+        skew_dir = f"{TMP}/docs_skewed_{n_docs}"
         for d, frac in ((uni_dir, 0.0), (skew_dir, 0.3)):
             if not os.path.exists(f"{d}/documents.parquet"):
                 print(f"building {n_docs}-doc corpus (hot_frac={frac}) at {d} ...",

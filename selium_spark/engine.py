@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from .catalog import StreamCatalog
+from .streaming.partitions import query_partitions, state_partitions
 
 
 from .fsutil import fs_exists, fs_mkdirs, fs_touch  # noqa: E402  (re-export:
@@ -336,8 +337,8 @@ class Engine:
     def console_sink(self, df: DataFrame, name: str = "console"):
         """S12: host tails a stream and renders it (forward_log_stream,
         system/runtime/src/modules.rs:747-767)."""
-        return (
-            df.writeStream.queryName(name).format("console").outputMode("append").start()
+        return self._start(
+            df, df.writeStream.queryName(name).format("console").outputMode("append")
         )
 
     def start(
@@ -365,11 +366,35 @@ class Engine:
                 raise ValueError("park-mode query needs a checkpoint dir")
             writer = writer.option("checkpointLocation", checkpoint)
         if sink_uri is None:
-            q = writer.format("memory").start()
+            q = self._start(df, writer.format("memory"))
         else:
             entry = self.catalog.get(sink_uri)
-            q = writer.format(fmt or entry.fmt).start(entry.path)
+            q = self._start(df, writer.format(fmt or entry.fmt), entry.path)
         handle = QueryHandle(name=name, query=q, mode=mode)
+        self.queries[name] = handle
+        return handle
+
+    def _start(self, df: DataFrame, writer, path: str | None = None) -> StreamingQuery:
+        """Start ``writer`` (over ``df``): every live query starts here,
+        with ``state_partitions(df)`` shuffle partitions. The count holds
+        for the checkpoint's life (a restart reads it back from the
+        offset log); the session keeps its own for batch queries."""
+        with query_partitions(self.spark, state_partitions(df)):
+            return writer.start(path) if path else writer.start()
+
+    def _start_foreach_batch(
+        self,
+        name: str,
+        df: DataFrame,
+        process: Callable[[DataFrame, int], None],
+        checkpoint: str,
+    ) -> QueryHandle:
+        writer = (
+            df.writeStream.queryName(name)
+            .foreachBatch(process)
+            .option("checkpointLocation", checkpoint)
+        )
+        handle = QueryHandle(name=name, query=self._start(df, writer), mode="park")
         self.queries[name] = handle
         return handle
 
@@ -410,15 +435,7 @@ class Engine:
             write_fn(batch_df, epoch_id)
             fs_touch(spark, marker)
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        handle = QueryHandle(name=name, query=q, mode="park")
-        self.queries[name] = handle
-        return handle
+        return self._start_foreach_batch(name, df, _process, checkpoint)
 
     def streaming_dedup_index(
         self,
@@ -533,15 +550,7 @@ class Engine:
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
             foreach_concurrent(batch_df, fn, max_concurrency)
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        handle = QueryHandle(name=name, query=q, mode="park")
-        self.queries[name] = handle
-        return handle
+        return self._start_foreach_batch(name, df, _process, checkpoint)
 
     def foreach_batch_routes(
         self,
@@ -568,12 +577,4 @@ class Engine:
             finally:
                 batch_df.unpersist()
 
-        q = (
-            df.writeStream.queryName(name)
-            .foreachBatch(_process)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        handle = QueryHandle(name=name, query=q, mode="park")
-        self.queries[name] = handle
-        return handle
+        return self._start_foreach_batch(name, df, _process, checkpoint)

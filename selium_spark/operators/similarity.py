@@ -36,10 +36,14 @@ def _num_sql(v) -> str:
     integral -> INT when it fits else BIGINT (the parser's own rule,
     matching py4j's int/long conversion); float -> repr (shortest
     round-trip decimal, Double.parseDouble-exact) with a D suffix
-    (scientific notation is already DOUBLE)."""
+    (scientific notation is already DOUBLE). An int outside int64
+    raises ``ValueError``, as ``F.lit`` does (the parser would type it
+    DECIMAL(38,0))."""
     if isinstance(v, bool):
         raise TypeError("bool literal not supported")
     if isinstance(v, int):
+        if not -(2**63) <= v < 2**63:
+            raise ValueError(f"int literal {v} is outside int64")
         return str(v)
     f = float(v)
     if not math.isfinite(f):
@@ -55,12 +59,14 @@ def _array_lit(values: list) -> Column:
     (8x64 + 8x16x8 values) cost ~10k driver round trips, ~1.5-2 s of
     wall, per query CONSTRUCTION (r13 session-2 cProfile); one parsed
     string builds the identical literal tree JVM-side. Values must be
-    finite ints/floats; type rules match F.lit (see _num_sql)."""
-    if not values:
-        raise ValueError("empty literal array")
+    finite ints/floats; type rules match F.lit (see _num_sql). An empty
+    array at any depth raises ``ValueError``: SQL ``array()`` types as
+    ``array<string>`` and would fail later in analysis."""
 
     def render(v) -> str:
         if isinstance(v, (list, tuple)):
+            if not v:
+                raise ValueError(f"empty literal array in {values!r}")
             return "array(" + ",".join(render(x) for x in v) + ")"
         return _num_sql(v)
 

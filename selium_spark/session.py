@@ -5,8 +5,11 @@ same code scales to a 1000-executor cluster against ~100 TB:
 
 - AQE on (runtime coalesce, skew-join splitting) so shuffle partition
   counts self-correct at any scale factor.
-- ``spark.sql.shuffle.partitions`` defaults to ``max(cpus, 8)``; on a
-  real cluster this is overridden (or left to AQE's initialPartitionNum).
+- ``spark.sql.shuffle.partitions`` defaults to ``max(cpus, 8)``, the
+  count of batch queries; on a real cluster this is overridden (or left
+  to AQE's initialPartitionNum). Streaming queries do not take it: each
+  starts with ``streaming.state_partitions(df)``, sized from its first
+  micro-batch's input (AQE does not re-plan streaming state).
 - Arrow enabled for every Python<->JVM exchange (Pandas UDFs are the
   only Python hot path we allow).
 - Session timezone pinned to UTC so results are comparable with the

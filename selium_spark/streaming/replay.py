@@ -20,16 +20,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from .partitions import query_partitions, state_partitions
 from .state import state_store_provider
-
-#: State-store partitions of a replay (``spark.sql.shuffle.partitions``
-#: for the query's life). Streaming state stores pay a per-partition
-#: commit every micro-batch, so the count is sized to state volume, not
-#: to cores: r12's 19.06 s `stream_attr_last_touch` reading came from a
-#: replay inheriting the 32-core bench session's 32 partitions (r13: 8
-#: vs 32 was flat in an isolated A/B, but 8 was consistently fast in
-#: the full bench sweep).
-STATE_PARTITIONS = 8
 
 
 def file_stream(
@@ -60,45 +52,46 @@ def drained_run(
     sink: str,
     output_mode: str = "append",
     timeout_s: float = 300.0,
-    shuffle_partitions: int = STATE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     state_store: str | None = None,
     query_name: str | None = None,
 ) -> Iterator[StreamingQuery]:
     """Run ``out`` to the ``sink`` format with an ``availableNow``
     trigger and yield the terminated query.
 
-    ``shuffle_partitions`` is set for the query's start (Spark keeps it
-    in the offset log) and restored on exit. ``state_store`` selects the
-    state-store provider for this query ('rocksdb' for disk-backed
-    bounded-memory state; None keeps the session default). The
-    checkpoint lives in a temp dir removed on exit.
+    ``shuffle_partitions`` is the query's state-partition count, set
+    for its start only (Spark keeps it in the offset log). ``None``
+    derives it from the first micro-batch's input bytes
+    (``partitions.state_partitions``: one partition per
+    ``STATE_PARTITION_BYTES``, at most the cores); an int pins it.
+    ``state_store`` selects the state-store provider for this query
+    ('rocksdb' for disk-backed bounded-memory state; None keeps the
+    session default). The checkpoint lives in a temp dir removed on
+    exit.
 
     Raises ``TimeoutError`` (after stopping the query) when it has not
     drained within ``timeout_s``: a partial run never looks complete.
     """
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if shuffle_partitions is None:
+        shuffle_partitions = state_partitions(out)
     provider_ctx = (
         state_store_provider(spark, state_store) if state_store else contextlib.nullcontext()
     )
-    try:
-        with tempfile.TemporaryDirectory(prefix="selium_ckpt_") as ckpt, provider_ctx:
-            writer = out.writeStream.outputMode(output_mode).format(sink)
-            if query_name:
-                writer = writer.queryName(query_name)
-            query = (
-                writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    with tempfile.TemporaryDirectory(prefix="selium_ckpt_") as ckpt, provider_ctx:
+        writer = out.writeStream.outputMode(output_mode).format(sink)
+        if query_name:
+            writer = writer.queryName(query_name)
+        writer = writer.option("checkpointLocation", ckpt).trigger(availableNow=True)
+        with query_partitions(spark, shuffle_partitions):
+            query = writer.start()
+        query.awaitTermination(timeout_s)
+        if query.isActive:
+            query.stop()
+            raise TimeoutError(
+                f"streaming query {query_name or query.id} did not drain "
+                f"within {timeout_s} s; the query was stopped"
             )
-            query.awaitTermination(timeout_s)
-            if query.isActive:
-                query.stop()
-                raise TimeoutError(
-                    f"streaming query {query_name or query.id} did not drain "
-                    f"within {timeout_s} s; the query was stopped"
-                )
-            yield query
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
+        yield query
 
 
 def replay_to_memory(
@@ -109,7 +102,7 @@ def replay_to_memory(
     output_mode: str = "append",
     max_files_per_trigger: int | None = None,
     timeout_s: float = 300.0,
-    shuffle_partitions: int = STATE_PARTITIONS,
+    shuffle_partitions: int | None = None,
     state_store: str | None = None,
     fmt: str = "parquet",
 ) -> DataFrame:
@@ -117,9 +110,13 @@ def replay_to_memory(
     to memory, block until drained, return the sink's contents.
 
     ``shuffle_partitions`` sizes the stateful-operator state-store count
-    for THIS query. It defaults to ``STATE_PARTITIONS`` (8), never the
-    session's count: a replay that inherits a 32-core session's
-    partitions pays 32 state-store commits per micro-batch.
+    for THIS query, never the session's count: a replay that inherited
+    a 32-core session's partitions paid 32 state-store commits per
+    micro-batch. ``None`` (the default) derives it from the replayed
+    bytes (``partitions.state_partitions``: ``ceil(bytes /
+    STATE_PARTITION_BYTES)`` clamped to [1, cores], the first
+    micro-batch's share under ``max_files_per_trigger``); an int pins
+    it.
 
     ``state_store`` and the ``TimeoutError`` contract are those of
     ``drained_run``.

@@ -1845,17 +1845,22 @@ def ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal by construction."""
     import tempfile
 
+    # the top-k is materialized (localCheckpoint) before the index dir goes
+    with tempfile.TemporaryDirectory(prefix="selium_ivf_idx_") as path:
+        return _ivf_index_probe(spark, sf_dir, path).localCheckpoint(eager=True)
+
+
+def _ivf_index_probe(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """``ann_ivf_index_topk``'s index write to ``path`` and its lazy
+    probe over it (the plan tests/test_plans.py asserts)."""
     emb = _t(spark, sf_dir, "embeddings")
     centroids = similarity.make_centroids(emb, n=8)
     query_vec = [
         float(x)
         for x in emb.where(F.col("vec_id") == 0).select("embedding").first()["embedding"]
     ]
-    path = tempfile.mkdtemp(prefix="selium_ivf_idx_")
     similarity.ivf_index_write(emb, centroids, path)
-    return similarity.ivf_index_topk(
-        spark, path, centroids, query_vec, k=10, n_probe=2
-    )
+    return similarity.ivf_index_topk(spark, path, centroids, query_vec, k=10, n_probe=2)
 
 
 SQL_ANN_IVF = f"""
@@ -3277,11 +3282,19 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed-list isin filter compiles to PartitionFilters on this
     layout, so the scan touches n_probe/K of the files and only
     m_subs-byte-ish codes — the actual 100 TB probe (plan-asserted
-    against this exact construction in tests/test_plans.py). Results
-    equal the on-the-fly composite, hence the same DuckDB oracle as
-    ann_ivfpq_topk."""
+    against this exact construction, ``_ivfpq_index_probe``, in
+    tests/test_plans.py). Results equal the on-the-fly composite, hence
+    the same DuckDB oracle as ann_ivfpq_topk."""
     import tempfile
 
+    # the top-k is materialized (localCheckpoint) before the index dir goes
+    with tempfile.TemporaryDirectory(prefix="selium_ivfpq_idx_") as path:
+        return _ivfpq_index_probe(spark, sf_dir, path).localCheckpoint(eager=True)
+
+
+def _ivfpq_index_probe(spark: SparkSession, sf_dir: str, path: str) -> DataFrame:
+    """``ann_ivfpq_index_topk``'s index write to ``path`` and its lazy
+    probe over it (the plan tests/test_plans.py asserts)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = [float(x) for x in emb.where(F.col("vec_id") == 0).head()["embedding"]]
     cents = similarity.make_centroids(emb, n=8)
@@ -3289,11 +3302,9 @@ def ann_ivfpq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = similarity.ivfpq_codebook(
         similarity.ivfpq_residuals(first16, cents), m_subs=8, k_codes=16
     )
-    path = tempfile.mkdtemp(prefix="selium_ivfpq_idx_")
     similarity.ivfpq_index_write(emb, cents, cb, path)
-    index = spark.read.parquet(path)
     return similarity.ivfpq_adc_topk(
-        index, cents, cb, q, k=10, n_probe=2, m_subs=8
+        spark.read.parquet(path), cents, cb, q, k=10, n_probe=2, m_subs=8
     )
 
 

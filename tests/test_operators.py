@@ -153,6 +153,19 @@ def test_simhash_similar_docs_close(spark):
     assert ham_12 < ham_13
 
 
+@pytest.mark.parametrize(
+    "values",
+    [[2**63], [1, -(2**63) - 1], [[0.5, 1.0], [2**64]], [[1.0], []], [[[]]]],
+    ids=["int_above_int64", "int_below_int64", "nested_int_above_int64", "nested_empty", "deep_empty"],
+)
+def test_array_literal_rejects_what_f_lit_cannot_type(spark, values):
+    """The parsed array literal fails at build time where ``F.lit`` would:
+    an int outside int64 (the parser would type it DECIMAL(38,0)) and an
+    empty array at any depth (``array()`` types as ``array<string>``)."""
+    with pytest.raises(ValueError):
+        similarity._array_lit(values)
+
+
 def test_cosine_and_topk(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.0, 1.0])],

@@ -403,22 +403,28 @@ def test_dq_expectations_single_scan(spark):
     assert p.n_sortmerge_joins == 0 and p.n_broadcast_joins == 0
 
 
-def test_ann_ivfpq_index_topk_partition_pruned(spark):
+def test_ann_ivfpq_index_topk_partition_pruned(spark, tmp_path):
     """The GRADED index-read query (r12): the suite's exact
     construction — ivfpq_index_write then ivfpq_adc_topk over the
     partitionBy(cluster_id) read — must compile its probed-list isin
     filter to PartitionFilters (the n_probe/K file-pruned 100 TB
-    probe), not a post-scan filter."""
-    p = plan_of(spark, "ann_ivfpq_index_topk")
+    probe), not a post-scan filter. The query itself returns the
+    materialized top-k, so the plan is read off its lazy probe."""
+    from selium_spark.suite import _ivfpq_index_probe
+
+    p = summarize(_ivfpq_index_probe(spark, SF, str(tmp_path / "idx")))
     assert "PartitionFilters" in p.text
     assert "cluster_id" in p.text.split("PartitionFilters", 1)[1][:300]
 
 
-def test_ann_ivf_index_topk_partition_pruned(spark):
+def test_ann_ivf_index_topk_partition_pruned(spark, tmp_path):
     """The plain-IVF graded index read (r12): the suite construction's
     probed-list isin filter must compile to PartitionFilters on the
-    partitionBy(cluster_id) layout."""
-    p = plan_of(spark, "ann_ivf_index_topk")
+    partitionBy(cluster_id) layout (read off the query's lazy probe,
+    as above)."""
+    from selium_spark.suite import _ivf_index_probe
+
+    p = summarize(_ivf_index_probe(spark, SF, str(tmp_path / "idx")))
     assert "PartitionFilters" in p.text
     assert "cluster_id" in p.text.split("PartitionFilters", 1)[1][:300]
 

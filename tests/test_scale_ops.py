@@ -4,11 +4,16 @@ join, IVF assignment sanity."""
 from __future__ import annotations
 
 import io
+import os
+import sys
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from selium_spark.operators import relational
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -211,9 +216,7 @@ def test_stream_replay_metrics_machinery(spark, tmp_path):
     tiny corpus: rows counted, batches > 1 under maxFilesPerTrigger,
     state rows/memory and trigger percentiles populated — so
     scale_stress.py --streaming cannot rot silently between rounds."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from pyspark.sql import functions as F
 
     from scripts.scale_stress import stream_replay_metrics
@@ -288,9 +291,7 @@ def test_stream_ops_streaming_session_runs(spark, tmp_path):
     replays end-to-end (append mode, rocksdb): sessions merge in JVM
     state and the replay's state_rows stay bounded by open sessions,
     not events."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from pyspark.sql import functions as F
 
     from scripts.scale_stress import _stream_ops, stream_replay_metrics
@@ -332,9 +333,7 @@ def test_stream_ops_interval_join_runs(spark, tmp_path):
     stress set replays end-to-end: pairs emit and click state is
     evicted under the watermark (state stays O(unexpired clicks),
     not O(events))."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     from pyspark.sql import functions as F
 
     from scripts.scale_stress import _stream_ops, stream_replay_metrics
@@ -626,3 +625,25 @@ def test_index_write_auto_salt_splits_hot_cluster(spark, tmp_path):
     a = sorted(tuple(r) for r in spark.read.parquet(plain).collect())
     b = sorted(tuple(r) for r in spark.read.parquet(auto).collect())
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [("ann_ivf_index_topk", "selium_ivf_idx_"), ("ann_ivfpq_index_topk", "selium_ivfpq_idx_")],
+)
+def test_ann_index_queries_leave_no_index_dir(spark, name, prefix):
+    """The index a serving query writes is removed before it returns:
+    the top-k is materialized, so no ``selium_ivf*_idx_*`` dir is left
+    behind per call."""
+    import glob
+    import tempfile
+
+    from conftest import SF_DIR
+
+    from selium_spark.suite import QUERIES
+
+    pattern = os.path.join(tempfile.gettempdir(), prefix + "*")
+    before = set(glob.glob(pattern))
+    out = QUERIES[name](spark, SF_DIR)
+    assert out.count() > 0
+    assert set(glob.glob(pattern)) <= before

@@ -84,3 +84,35 @@ def test_pandas_udf_runs_from_a_foreign_cwd_without_pythonpath(tmp_path):
         (int(b), int(n)) for b, n in con.sql(ORACLES["wasm_udf_lcg_bucket"]).fetchall()
     )
     assert proc.stdout.strip().splitlines()[-1] == str(want)
+
+
+IMPORT_ORACLE_GATE = """
+import sys
+sys.path.append(sys.argv[1])
+import scripts.check_correctness
+import selium_spark
+print(selium_spark.__file__)
+"""
+
+
+def test_oracle_gate_grades_its_own_checkout(tmp_path):
+    """``scripts/check_correctness.py`` imports ``selium_spark`` from the
+    checkout it lives in, so a second checkout is graded as itself."""
+    import shutil
+
+    copy = tmp_path / "checkout"
+    ignore = shutil.ignore_patterns("__pycache__")
+    for d in ("selium_spark", "scripts"):
+        shutil.copytree(os.path.join(PACKAGE_ROOT, d), copy / d, ignore=ignore)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", IMPORT_ORACLE_GATE, str(copy)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    imported = os.path.realpath(proc.stdout.strip().splitlines()[-1])
+    assert imported.startswith(os.path.realpath(copy) + os.sep)
