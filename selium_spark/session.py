@@ -22,6 +22,16 @@ same code scales to a 1000-executor cluster against ~100 TB:
   and every UDF that imports the package — whatever the working
   directory. Sessions are ``local[N]``, so the driver's package root
   is the workers' too.
+- The driver JVM's JIT compiler threads run at OS nice 19
+  (:func:`driver_java_options`, in ``spark.driver.defaultJavaOptions``):
+  a ``local[N]`` session runs the driver, the N task threads and the
+  JIT in one JVM on the same N cores, so when the queries keep those
+  cores busy the compilers yield to them. spark-submit puts the default
+  options before ``spark.driver.extraJavaOptions`` and HotSpot takes a
+  flag's last occurrence, so a caller overrides the rule with its own
+  ``-XX:CompilerThreadPriority`` (or ``-XX:ThreadPriorityPolicy=0``) in
+  ``spark.driver.extraJavaOptions``. A ``spark.driver.defaultJavaOptions``
+  passed in ``extra_conf`` is appended after ours.
 """
 
 from __future__ import annotations
@@ -32,6 +42,39 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def driver_java_options(caller: str = "") -> str:
+    """The driver JVM's ``spark.driver.defaultJavaOptions``: HotSpot's
+    JIT compiler threads at OS nice 19, then ``caller``'s own default
+    options (so a flag the caller repeats wins).
+
+    A ``local[N]`` session runs the driver, the N task threads and the
+    JIT compilers in one JVM on the same cores, and HotSpot sizes its
+    compiler pool as if the JVM had the host to itself (3 threads at 4
+    CPUs, 15 at 32). At nice 19 a compiler thread gets about 1/70 of a
+    nice-0 thread's CPU share, so while the queries keep the cores busy
+    the JIT yields to them, and it compiles in the idle time between.
+    ``ThreadPriorityPolicy=1`` lets the JVM set thread priorities at
+    all. It then also maps Java thread priorities to nice values: when
+    the process may raise priorities (root), a few JVM-internal threads
+    (GC, VM thread) go to nice -4; otherwise the JVM warns that raising
+    is ignored. Lowering the compilers works either way.
+
+    Measured at 4 cores only (a 4-vCPU VM), on ``perfbench``'s
+    ``stream_open`` (three live queries that keep the CPUs busy, where
+    the C2 compilers used 1.14 of the JVM's 3.0 cores) and
+    ``batch_sf01`` (a closed loop with idle cores); the readings are in
+    CHANGES.md. The cost: ``batch_sf01`` ``setup_s`` +15 %, since its
+    cold pass keeps the cores busy and the JIT then waits. Measured and
+    not taken: a pool of ``max(2, cpus // 4)`` threads (``stream_open``
+    ``latency_p50_s`` -9 %, ``batch_sf01`` ``latency_p50_s`` +15 %),
+    nice 5 (``stream_open`` p50 -6 %), that pool at nice 19
+    (``batch_sf01`` ``setup_s`` +4 to +47 %),
+    ``-XX:TieredStopAtLevel=1`` (``wall_s`` +30 %: the bursts need C2
+    code) and ``-XX:-TieredCompilation`` (``setup_s`` 12.8 -> 15.6 s).
+    """
+    return f"-XX:ThreadPriorityPolicy=1 -XX:CompilerThreadPriority=19 {caller}".strip()
 
 
 def get_spark(
@@ -54,6 +97,7 @@ def get_spark(
         for p in extra_conf.pop("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
         if p
     ]
+    java_options = driver_java_options(extra_conf.pop("spark.driver.defaultJavaOptions", ""))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -65,6 +109,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.defaultJavaOptions", java_options)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # parquet scans: split files ~128MB like a real cluster would
@@ -113,26 +158,29 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     # getOrCreate() silently returns the EXISTING session when one is
     # already live in this JVM, ignoring builder configs that are
-    # static (codegen cache, driver memory, master). Read the
-    # static-at-startup ones back and warn on mismatch so an A/B
+    # static (codegen cache, driver memory, JVM options, master). Read
+    # the static-at-startup ones back and warn on mismatch so an A/B
     # script (or a second get_spark with different env) cannot run
-    # with a stale value while appearing configured (r12 ADVICE).
+    # with a stale value while appearing configured (r12 ADVICE). They
+    # are read from the SparkContext's conf, which holds what the JVM
+    # started with: getOrCreate copies every builder option into the
+    # live session's runtime conf, so spark.conf.get would echo the
+    # request back, or raise SQL_CONF_NOT_FOUND before that copy.
     requested = {
         "spark.sql.codegen.cache.maxEntries": os.environ.get(
             "SPARK_GRAFT_CODEGEN_CACHE", "10000"
         ),
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.defaultJavaOptions": java_options,
         **{
             k: v
             for k, v in extra_conf.items()
             if k.startswith(("spark.driver.", "spark.sql.codegen.cache."))
         },
     }
+    started = spark.sparkContext.getConf()
     for key, want in requested.items():
-        try:
-            got = spark.conf.get(key)
-        except Exception:
-            continue
+        got = started.get(key)  # None: the JVM started without it
         if got != want:
             import warnings
 
